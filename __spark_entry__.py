@@ -51,6 +51,7 @@ from gdp_etl_spark.functions.text import (
     token_count_ws,
     ws_tokens,
 )
+from gdp_etl_spark.io import load_table as _t
 from gdp_etl_spark.operators.closure import rollup_hierarchy, transitive_closure
 from gdp_etl_spark.operators.dedup import (
     embedding_near_dup_pairs,
@@ -81,28 +82,6 @@ from gdp_etl_spark.operators.windows import (
     rebase_index,
 )
 from gdp_etl_spark.session import local_df
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return _events(spark, sf_dir)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name in ("documents", "embeddings"):
-        # these ship as one single-row-group file → 1 input split → the
-        # expensive per-row work (shingling, hashing, vector math) runs
-        # single-threaded.  Spread it across the cluster once up front;
-        # at real scale the tables arrive as many files and this is a
-        # no-op decision made by the writer, not the reader.
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events with a normalized µs ``ts`` whatever the file's physical
-    encoding (TIMESTAMP(NANOS) or TIMESTAMP(MICROS)) — see io.load_events."""
-    from gdp_etl_spark.io import load_events
-
-    return load_events(spark, sf_dir)
 
 
 # ===========================================================================
@@ -3819,7 +3798,7 @@ def q_resample_locf(spark, sf_dir):
     ``sequence`` explode + ignorenulls window, zero UDFs."""
     from gdp_etl_spark.operators.timeseries import resample_locf
 
-    ev = _events(spark, sf_dir).select("user_id", "ts", "value")
+    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
     return resample_locf(ev, ["user_id"], "ts", "value", step="1 hour")
 
 
@@ -3887,7 +3866,7 @@ def q_linear_trend(spark, sf_dir):
     are order-dependent."""
     from gdp_etl_spark.operators.regression import grouped_linear_fit
 
-    ev = _events(spark, sf_dir).select(
+    ev = _t(spark, sf_dir, "events").select(
         "event_type",
         (F.unix_micros("ts") / F.lit(3.6e9)).alias("x_hours"),
         F.col("value"),
@@ -4050,7 +4029,7 @@ def q_ab_test(spark, sf_dir):
     from gdp_etl_spark.operators.regression import welch_ttest
 
     return welch_ttest(
-        _events(spark, sf_dir), "event_type", "value", "click", "purchase"
+        _t(spark, sf_dir, "events"), "event_type", "value", "click", "purchase"
     )
 
 
@@ -4305,7 +4284,7 @@ def q_category_drift(spark, sf_dir):
     of the month vs second — the categorical sibling of drift_psi."""
     from gdp_etl_spark.operators.profile import category_drift
 
-    ev = _events(spark, sf_dir)
+    ev = _t(spark, sf_dir, "events")
     ref = ev.filter(F.dayofmonth("ts") <= 15).select("event_type")
     cur = ev.filter(F.dayofmonth("ts") > 15).select("event_type")
     return category_drift(ref, cur, "event_type")

@@ -27,9 +27,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
+from gdp_etl_spark.io import DEFAULT_SF_DIR as SF_DIR
 from gdp_etl_spark.session import get_spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 #: queries to EXCLUDE from the bench.  Empty by design since round 4:

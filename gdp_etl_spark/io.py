@@ -1,8 +1,10 @@
 """Table loading and sink helpers.
 
-``load_tables`` is the single entry point every query uses to get the
-driver's parquet tables; keeping it central means partition-level tuning
-(e.g. ``maxPartitionBytes``) has one place to live.
+``load_table`` is the single entry point every query uses to read a
+testdata table.  It reads with the schema declared in
+``schemas.TESTDATA_SCHEMAS``, so no read infers types (or pays
+inference's schema job), and partition-level tuning (e.g.
+``maxPartitionBytes``) has one place to live.
 
 Sinks mirror the reference's two CSV exports (SURVEY.md §2.1 S6/S7):
 single-file CSV is a *deliverable* semantic of the reference, so
@@ -18,59 +20,66 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import TESTDATA_TABLES
+from .schemas import TESTDATA_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver parquet table.  Parquet carries its schema;
-    column pruning + predicate pushdown happen at the scan."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Read one testdata table with its declared schema.
+
+    A declared read launches no schema job; column pruning + predicate
+    pushdown still happen at the scan.  An undeclared ``name`` raises
+    ``KeyError``."""
+    if name == "events":
+        return load_events(spark, sf_dir)
+    schema = TESTDATA_SCHEMAS[name]
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name in ("documents", "embeddings"):
+        # these ship as one single-row-group file → 1 input split → the
+        # expensive per-row work (shingling, hashing, vector math) runs
+        # single-threaded.  Spread it across the cluster once up front;
+        # at real scale the tables arrive as many files and this is a
+        # no-op decision made by the writer, not the reader.
+        df = df.repartition(spark.sparkContext.defaultParallelism)
+    return df
+
+
+def events_schema(spark: SparkSession, sf_dir: str) -> str:
+    """The declared events schema with ``ts`` as this sf_dir encodes it.
+
+    Driver testdata has shipped ``ts`` two ways: TIMESTAMP(NANOS) (which
+    Spark's reader rejects unless ``nanosAsLong`` maps it to bigint) and
+    plain TIMESTAMP(MICROS) (read natively as timestamp_ntz).  A footer
+    probe tells which; it is the one testdata read that infers, and so
+    the one load that launches a job."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    schema = TESTDATA_SCHEMAS["events"]
+    if dict(probe.dtypes)["ts"] == "bigint":
+        schema = schema.replace("ts timestamp_ntz", "ts bigint")
+    return schema
+
+
+def normalize_events_ts(raw: DataFrame) -> DataFrame:
+    """``ts`` as a µs TIMESTAMP, whichever encoding :func:`events_schema`
+    found.  ``ns div 1000`` is exact integer truncation, matching DuckDB
+    bit-for-bit (a double division would corrupt: epoch-nanos ≈ 1.7e18
+    ≫ 2^53)."""
+    if dict(raw.dtypes)["ts"] == "bigint":
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # native TIMESTAMP(MICROS) arrives as timestamp_ntz; normalize to
+    # TIMESTAMP (LTZ) so watermarks/windows accept it.  Session tz is
+    # UTC, so the cast is value-preserving and oracle-neutral.
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table with a normalized µs ``ts`` timestamp,
-    whatever the file's physical encoding.
-
-    Driver testdata has shipped ``ts`` two ways: TIMESTAMP(NANOS) (which
-    Spark's reader rejects unless ``nanosAsLong`` maps it to long) and
-    plain TIMESTAMP(MICROS) (read natively as timestamp_ntz).  Inspect
-    the footer schema — free, no data scan — and convert only when the
-    column arrives as nanos-long.  ``ns div 1000`` is exact integer
-    truncation, matching DuckDB bit-for-bit (a double division would
-    corrupt: epoch-nanos ≈ 1.7e18 ≫ 2^53).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    if dict(raw.dtypes)["ts"] in ("bigint", "long"):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # native TIMESTAMP(MICROS) arrives as timestamp_ntz; normalize to
-        # TIMESTAMP (LTZ) so watermarks/windows accept it.  Session tz is
-        # UTC, so the cast is value-preserving and oracle-neutral.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-def events_raw_ts_is_long(spark: SparkSession, sf_dir: str) -> bool:
-    """Whether the events parquet stores ``ts`` as nanos (→ long under
-    ``nanosAsLong``) rather than a native timestamp.  Footer-only probe;
-    used by the streaming reader, which must declare its schema up front."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return dict(raw.dtypes)["ts"] in ("bigint", "long")
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """All driver tables as a dict (lazy — nothing is scanned yet)."""
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Expose the driver tables to ``spark.sql`` under their plain names."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    whatever the file's physical encoding."""
+    schema = events_schema(spark, sf_dir)
+    raw = spark.read.schema(schema).parquet(os.path.join(sf_dir, "events.parquet"))
+    return normalize_events_ts(raw)
 
 
 def write_single_csv(df: DataFrame, path: str, header: bool = True) -> None:

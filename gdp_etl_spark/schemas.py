@@ -12,11 +12,9 @@ from __future__ import annotations
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 
@@ -108,35 +106,43 @@ GDP_UPDATE = StructType(
 
 
 # --------------------------------------------------------------------------
-# Driver test tables (TESTDATA.md) — declared for documentation/validation;
-# parquet carries its own schema, these are asserted against it in tests.
+# Driver test tables (TESTDATA.md) — read only through ``io.load_table``,
+# which declares these so no read infers; tests/test_testdata_schemas.py
+# asserts each equals the files' own schema at every shipped scale.
 # --------------------------------------------------------------------------
 
-LINEITEM = StructType(
-    [
-        _f("l_orderkey", LongType()),
-        _f("l_partkey", LongType()),
-        _f("l_suppkey", LongType()),
-        _f("l_linenumber", IntegerType()),
-        _f("l_quantity", DoubleType()),
-        _f("l_extendedprice", DoubleType()),
-        _f("l_discount", DoubleType()),
-        _f("l_tax", DoubleType()),
-        _f("l_returnflag", StringType()),
-        _f("l_linestatus", StringType()),
-        _f("l_shipdate", TimestampType()),
-    ]
-)
+#: table name -> Spark DDL; ``events.ts`` is the MICROS encoding (the
+#: NANOS one reads as bigint — see ``io.events_schema``)
+TESTDATA_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, "
+        "l_tax double, l_returnflag string, l_linestatus string, "
+        "l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": (
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ),
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import SparkSession
 
 _LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+#: the directory holding this package — Python workers import it by name
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -68,6 +70,12 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
+        # --- Python workers import this package by name ------------------
+        # Without this they find it only through the driver's cwd, so a
+        # driver started outside the repo root fails every UDF /
+        # mapInArrow fn that imports gdp_etl_spark (ModuleNotFoundError).
+        # Spark merges this with any PYTHONPATH the host already sets.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # keep UI off in tests/bench (startup cost, port clashes)
         .config("spark.ui.enabled", "false")
     )

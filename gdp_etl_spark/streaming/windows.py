@@ -15,50 +15,29 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: stream schemas for the two physical encodings the driver's events
-#: parquet has shipped with (ts as TIMESTAMP(NANOS)→long under
-#: nanosAsLong, or native TIMESTAMP(MICROS)→timestamp_ntz).
-EVENTS_RAW_SCHEMA_NANOS = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
-)
-EVENTS_RAW_SCHEMA_MICROS = (
-    "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-    "value double, props string"
-)
+from ..io import events_schema, normalize_events_ts
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream the driver's events parquet with a normalized µs
     ``ts`` timestamp (same semantics as the batch ``io.load_events``).
 
-    A file stream must declare its schema up front, so probe the parquet
-    footer via the batch reader first (footer-only, no data scan) to
-    learn which encoding this sf_dir uses."""
-    from ..io import events_raw_ts_is_long
-
-    ts_is_long = events_raw_ts_is_long(spark, sf_dir)
-    schema = EVENTS_RAW_SCHEMA_NANOS if ts_is_long else EVENTS_RAW_SCHEMA_MICROS
+    A file stream must declare its schema up front; ``io.events_schema``
+    probes the parquet footer (no data scan) to learn which ``ts``
+    encoding this sf_dir uses."""
     # the file-stream source wants a directory; select the events file
     # out of the shared sf_dir with a glob filter
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(events_schema(spark, sf_dir))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if ts_is_long:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # normalize timestamp_ntz → TIMESTAMP (LTZ) for watermark support;
-        # session tz is UTC so the cast is value-preserving
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_events_ts(raw)
 
 
 def tumbling_counts(

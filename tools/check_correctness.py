@@ -15,18 +15,15 @@ Usage: python tools/check_correctness.py [query ...]   (default: all)
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def norm_cell(v):
@@ -162,13 +159,14 @@ def compare(name, spark_rows, spark_cols, oracle_rows, oracle_cols):
 
 def main():
     import __spark_entry__ as e
+    from gdp_etl_spark.schemas import TESTDATA_TABLES
     from gdp_etl_spark.session import get_spark
 
     only = set(sys.argv[1:])
     qs, oracles = e.queries(), e.oracle_sql()
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
