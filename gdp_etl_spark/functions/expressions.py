@@ -156,20 +156,33 @@ def bigint_array_lit(values: Sequence[int]) -> Column:
     BIGINT (the old per-element form coerced mixed int/long arrays to
     the widest type anyway, and every consumer compares or folds
     against bigint columns)."""
-    return F.expr(
-        "array(" + ",".join(f"{int(v)}L" for v in values) + ")"
-    )
+    return F.expr(f"array({_bigint_elems(values)})")
+
+
+def _bigint_elems(values: Sequence[int]) -> str:
+    """``1L,2L,…`` for a non-empty run of integral values.  An empty
+    run would parse as an untyped ``array()``, and ``int(v)`` would
+    truncate a fractional value silently — both raise instead."""
+    if len(values) == 0:
+        raise ValueError("bigint literal: empty array")
+    for v in values:
+        try:
+            integral = int(v) == v
+        except (TypeError, ValueError, OverflowError):  # None, NaN, ±Inf
+            integral = False
+        if not integral:
+            raise ValueError(f"bigint literal: {v!r} is not an integer")
+    return ",".join(f"{int(v)}L" for v in values)
 
 
 def bigint_matrix_lit(rows: Sequence[Sequence[int]]) -> Column:
     """``array<array<bigint>>`` literal in one parse call — the
     nested-matrix form of :func:`bigint_array_lit` (literal k-means
     centroids, PQ codebooks, Rademacher sign matrices)."""
+    if len(rows) == 0:
+        raise ValueError("bigint literal: empty matrix")
     return F.expr(
         "array("
-        + ",".join(
-            "array(" + ",".join(f"{int(v)}L" for v in r) + ")"
-            for r in rows
-        )
+        + ",".join(f"array({_bigint_elems(r)})" for r in rows)
         + ")"
     )

@@ -125,9 +125,10 @@ def cosine_exact_arrow(a: Column, b: Column) -> Column:
             A = np.stack([np.asarray(av[i], dtype=np.float64) for i in idxs])
             B = np.stack([np.asarray(bv[i], dtype=np.float64) for i in idxs])
             # NULL elements arrive as NaN; the JVM fold nullifies the
-            # whole sum for them, so those pairs stay NULL.  Zero the
-            # rows before the int64 cast (NaN -> int64 is undefined).
-            ok = ~(np.isnan(A).any(axis=1) | np.isnan(B).any(axis=1))
+            # whole sum for them, so those pairs stay NULL — and so do
+            # ±Inf elements.  Zero the rows before the int64 cast
+            # (NaN/Inf -> int64 is undefined).
+            ok = np.isfinite(A).all(axis=1) & np.isfinite(B).all(axis=1)
             A = np.where(ok[:, None], A, 0.0)
             B = np.where(ok[:, None], B, 0.0)
             na2 = np.floor((A * A) * _FP_SCALE).sum(axis=1, dtype=np.int64) / _FP_SCALE

@@ -88,14 +88,20 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.expressions import bigint_array_lit
 from ..session import local_df
 from .dedup import _compact_bucketed_table, _num_buckets
 from .kmeans import (
-    _dist2,
+    _adc_scores,
+    _check_id_col,
+    _check_query_ids,
+    _explode_scores,
+    _ivf_scores,
+    _pq_encode,
+    _probe_cells,
     _quantize,
+    _query_vectors,
+    _topk_d2,
     assign_expr,
     train_kmeans_fixed,
     train_pq_codebooks,
@@ -118,9 +124,15 @@ __all__ = [
     "compact_pq_index",
 ]
 
-_P = "ivf."  # table-property namespace
-_KEYS = ("num_centroids", "n_iter", "scale", "offset", "seed",
-         "id_col", "vec_col", "next_seq")
+# table-property namespace and stamped key spec, per index kind
+_P = "ivf."
+_KEYS = {"num_centroids": int, "n_iter": int, "scale": float,
+         "offset": float, "seed": str, "id_col": str, "vec_col": str,
+         "next_seq": int}
+_PQ = "pq."
+_PQ_KEYS = {"m": int, "k_codes": int, "n_iter": int, "scale": float,
+            "offset": float, "seed": str, "id_col": str, "vec_col": str,
+            "dim": int, "next_seq": int}
 
 
 def _centroids_table(table: str) -> str:
@@ -273,13 +285,16 @@ def _twin_query_rows(spark, table: str, id_col: str,
         spark.conf.set(key, prev)
 
 
-def _upsert_ids(df: DataFrame, id_col: str, vec_col: str,
-                fn_name: str) -> DataFrame:
-    """The id frame an upsert's tombstones derive from — guarded so a
-    NULL-vector row RAISES instead of silently deleting the id (r14
-    advisor finding: the posting/code append drops NULL vectors, so an
-    unguarded tombstone would kill the id with no replacement row).
-    Deletion is a separate, explicit operation."""
+def _upsert_tombstones(df: DataFrame, table: str, p: dict,
+                       fn_name: str) -> None:
+    """An upsert's first write: tombstone the batch's ids at the
+    stamped ``next_seq`` — the seq its append body then writes at.
+    The id frame is guarded so a NULL-vector row RAISES instead of
+    silently deleting the id (r14 advisor finding: the posting/code
+    append drops NULL vectors, so an unguarded tombstone would kill
+    the id with no replacement row).  Deletion is a separate,
+    explicit operation."""
+    id_col, vec_col = p["id_col"], p["vec_col"]
     guard = F.when(
         F.col(vec_col).isNull(),
         F.raise_error(
@@ -292,7 +307,10 @@ def _upsert_ids(df: DataFrame, id_col: str, vec_col: str,
             )
         ).cast("boolean"),
     ).otherwise(F.lit(True))
-    return df.filter(guard).select(id_col)
+    _append_tombstones(
+        df.sparkSession, table, id_col, df.filter(guard).select(id_col),
+        p["next_seq"],
+    )
 
 
 def _snapshot(spark, table: str, id_col: str,
@@ -379,42 +397,37 @@ def ivf_index_stats(spark, table: str) -> DataFrame:
 
 def pq_index_stats(spark, table: str) -> DataFrame:
     """:func:`ivf_index_stats` for the PQ codes table."""
-    p = _read_pq_stamp(spark, table)
+    p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
     return _index_stats(spark, table, p["id_col"], p["next_seq"])
 
 
-def _stamp(spark, table: str, params: dict) -> None:
+def _stamp(spark, table: str, prefix: str, params: dict) -> None:
     """Quote-escaped property stamp (the _compact_bucketed_table rule:
     a hostile value is a stored string, not a syntax error)."""
     kv = ", ".join(
-        "'{}{}' = '{}'".format(_P, k, str(v).replace("'", "''"))
+        "'{}{}' = '{}'".format(prefix, k, str(v).replace("'", "''"))
         for k, v in sorted(params.items())
     )
     spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
 
 
-def _read_stamp(spark, table: str) -> dict:
+def _read_stamp(spark, table: str, prefix: str = _P,
+                keys: dict = _KEYS) -> dict:
+    """The index parameters stamped under ``prefix``, typed by the
+    ``keys`` spec; raises when any is missing (not an index table of
+    that kind, or one written before a format bump)."""
     props = {
         r["key"]: r["value"]
         for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     }
-    missing = [k for k in _KEYS if _P + k not in props]
+    missing = [prefix + k for k in keys if prefix + k not in props]
     if missing:
+        kind = prefix.rstrip(".")
         raise ValueError(
-            f"{table} is not an IVF index table (missing properties "
-            f"{[_P + k for k in missing]}); create it with "
-            f"write_ivf_index"
+            f"{table} is not a stamped {kind} index table (missing "
+            f"properties {missing}); create it with write_{kind}_index"
         )
-    return {
-        "num_centroids": int(props[_P + "num_centroids"]),
-        "n_iter": int(props[_P + "n_iter"]),
-        "scale": float(props[_P + "scale"]),
-        "offset": float(props[_P + "offset"]),
-        "seed": props[_P + "seed"],
-        "id_col": props[_P + "id_col"],
-        "vec_col": props[_P + "vec_col"],
-        "next_seq": int(props[_P + "next_seq"]),
-    }
+    return {k: typ(props[prefix + k]) for k, typ in keys.items()}
 
 
 def _load_centroids(spark, table: str) -> list[list[int]]:
@@ -432,9 +445,10 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str, dim: int,
     """Quantize one batch of vectors to ``(id, q, seq)`` — map-only,
     whole-stage codegen, NULL vectors dropped (the kmeans_fixed rule).
     Vector dimension is checked per row against the index dimension
-    (silent truncation is the failure mode).  Feeds both the cell
-    assignment of :func:`_postings` and the id-keyed ``__vectors``
-    twin the probe fetches query vectors from."""
+    (silent truncation is the failure mode).  Feeds the cell
+    assignment of :func:`_postings`, the id-keyed ``__vectors`` twin
+    the probe fetches query vectors from, and the PQ encoder of
+    :func:`_pq_codes`."""
     q = _quantize(F.col(vec_col), scale, offset)
     guarded = F.when(
         F.size(F.col(vec_col)) != F.lit(dim),
@@ -476,6 +490,18 @@ def _postings(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
+def _save_bucketed(df: DataFrame, table: str, key: str, num_buckets: int,
+                   mode: str) -> None:
+    """Write ``df`` as a parquet table bucketed and sorted by ``key``."""
+    (
+        df.write.mode(mode)
+        .format("parquet")
+        .bucketBy(num_buckets, key)
+        .sortBy(key)
+        .saveAsTable(table)
+    )
+
+
 def write_ivf_index(
     df: DataFrame,
     table: str,
@@ -504,12 +530,7 @@ def write_ivf_index(
     "already exists" (r13 advisor finding) — so a crash at any point
     leaves nothing, a retryable tmp, or a reclaimable orphan, never a
     stampless live index."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"write_ivf_index: id column {id_col!r} must be integral "
-            f"(probe compares against bigint literals); got {id_type}"
-        )
+    _check_id_col(df, id_col, "write_ivf_index")
     spark = df.sparkSession
     ctable = _centroids_table(table)
     vtable = _vectors_table(table)
@@ -553,24 +574,16 @@ def write_ivf_index(
     # columnar re-scans at bench scale, and at 100 TB it would write
     # corpus bytes to the cache tier to save two pruned parquet scans
     # — the guide's cache-only-when-recompute-is-costlier rule).
-    (
-        _quantized(df, id_col, vec_col, dim, scale, offset, seq=0)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, id_col)
-        .sortBy(id_col)
-        .saveAsTable(vtmp)
+    _save_bucketed(
+        _quantized(df, id_col, vec_col, dim, scale, offset, seq=0),
+        vtmp, id_col, num_buckets, "overwrite",
     )
     spark.sql(f"ALTER TABLE {vtmp} RENAME TO {vtable}")
-    (
-        _postings(df, id_col, vec_col, centroids, scale, offset, seq=0)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, "cell")
-        .sortBy("cell")
-        .saveAsTable(ptmp)
+    _save_bucketed(
+        _postings(df, id_col, vec_col, centroids, scale, offset, seq=0),
+        ptmp, "cell", num_buckets, "overwrite",
     )
-    _stamp(spark, ptmp, params)
+    _stamp(spark, ptmp, _P, params)
     spark.sql(f"ALTER TABLE {ptmp} RENAME TO {table}")
 
 
@@ -585,15 +598,31 @@ def _append_twin(qdf: DataFrame, table: str, p: dict) -> None:
     vtable = _vectors_table(table)
     if not spark.catalog.tableExists(vtable):
         return
-    (
-        qdf
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(_num_buckets(spark, vtable), p["id_col"])
-        .sortBy(p["id_col"])
-        .saveAsTable(vtable)
+    _save_bucketed(
+        qdf, vtable, p["id_col"], _num_buckets(spark, vtable), "append"
     )
     spark.catalog.refreshTable(vtable)
+
+
+def _append_ivf(df: DataFrame, table: str, p: dict,
+                centroids: list[list[int]]) -> None:
+    """The IVF append body, at the stamped ``next_seq``: quantize once,
+    cell-assign with the stored centroids, append postings and the
+    ``__vectors`` twin, bump the seq."""
+    spark = df.sparkSession
+    qdf = _quantized(
+        df, p["id_col"], p["vec_col"], len(centroids[0]),
+        p["scale"], p["offset"], seq=p["next_seq"],
+    )
+    _save_bucketed(
+        _assign_cells(qdf, p["id_col"], centroids),
+        table, "cell", _num_buckets(spark, table), "append",
+    )
+    _append_twin(qdf, table, p)
+    _bump_next_seq(spark, table, _P, p["next_seq"])
+    # the append_to_dedup_index catalog-cache rule: invalidate the
+    # cached file listing so a probe in this session sees the new rows
+    spark.catalog.refreshTable(table)
 
 
 def append_to_ivf_index(df: DataFrame, table: str) -> None:
@@ -607,25 +636,27 @@ def append_to_ivf_index(df: DataFrame, table: str) -> None:
     bytes until :func:`compact_ivf_index`."""
     spark = df.sparkSession
     p = _read_stamp(spark, table)
-    centroids = _load_centroids(spark, table)
-    n_buckets = _num_buckets(spark, table)
-    qdf = _quantized(
-        df, p["id_col"], p["vec_col"], len(centroids[0]),
-        p["scale"], p["offset"], seq=p["next_seq"],
+    _append_ivf(df, table, p, _load_centroids(spark, table))
+
+
+def _delete(spark, table: str, ids: Sequence[int], fn_name: str,
+            prefix: str, keys: dict) -> None:
+    """The tombstone-delete body shared by both index kinds: one
+    ``(id, seq)`` row per id at the stamped ``next_seq``, then the
+    guarded seq bump."""
+    ids = list(ids)
+    bad = [i for i in ids if not isinstance(i, int) or isinstance(i, bool)]
+    if bad:
+        raise TypeError(
+            f"{fn_name}: ids must be Python ints; got "
+            f"{bad[:3]!r}{'…' if len(bad) > 3 else ''}"
+        )
+    p = _read_stamp(spark, table, prefix, keys)
+    ids_df = local_df(
+        spark, [(int(i),) for i in ids], f"{p['id_col']} bigint"
     )
-    (
-        _assign_cells(qdf, p["id_col"], centroids)
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, "cell")
-        .sortBy("cell")
-        .saveAsTable(table)
-    )
-    _append_twin(qdf, table, p)
-    _bump_next_seq(spark, table, _P, p["next_seq"])
-    # the append_to_dedup_index catalog-cache rule: invalidate the
-    # cached file listing so a probe in this session sees the new rows
-    spark.catalog.refreshTable(table)
+    _append_tombstones(spark, table, p["id_col"], ids_df, p["next_seq"])
+    _bump_next_seq(spark, table, prefix, p["next_seq"])
 
 
 def delete_from_ivf_index(spark, table: str, ids: Sequence[int]) -> None:
@@ -636,19 +667,7 @@ def delete_from_ivf_index(spark, table: str, ids: Sequence[int]) -> None:
     that was never indexed is a no-op tombstone (idempotent, like a
     CDC delete for an unseen key).  Cost: one kilobyte-scale write +
     two metastore ops — the posting table is never scanned."""
-    ids = list(ids)
-    bad = [i for i in ids if not isinstance(i, int) or isinstance(i, bool)]
-    if bad:
-        raise TypeError(
-            f"delete_from_ivf_index: ids must be Python ints; got "
-            f"{bad[:3]!r}{'…' if len(bad) > 3 else ''}"
-        )
-    p = _read_stamp(spark, table)
-    ids_df = local_df(
-        spark, [(int(i),) for i in ids], f"{p['id_col']} bigint"
-    )
-    _append_tombstones(spark, table, p["id_col"], ids_df, p["next_seq"])
-    _bump_next_seq(spark, table, _P, p["next_seq"])
+    _delete(spark, table, ids, "delete_from_ivf_index", _P, _KEYS)
 
 
 def upsert_to_ivf_index(df: DataFrame, table: str) -> None:
@@ -672,29 +691,26 @@ def upsert_to_ivf_index(df: DataFrame, table: str) -> None:
     spark = df.sparkSession
     p = _read_stamp(spark, table)
     centroids = _load_centroids(spark, table)
-    n_buckets = _num_buckets(spark, table)
-    seq = p["next_seq"]
-    _append_tombstones(
-        spark, table, p["id_col"],
-        _upsert_ids(df, p["id_col"], p["vec_col"],
-                    "upsert_to_ivf_index"),
-        seq,
-    )
-    qdf = _quantized(
-        df, p["id_col"], p["vec_col"], len(centroids[0]),
-        p["scale"], p["offset"], seq=seq,
-    )
-    (
-        _assign_cells(qdf, p["id_col"], centroids)
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, "cell")
-        .sortBy("cell")
-        .saveAsTable(table)
-    )
-    _append_twin(qdf, table, p)
-    _bump_next_seq(spark, table, _P, seq)
-    spark.catalog.refreshTable(table)
+    _upsert_tombstones(df, table, p, "upsert_to_ivf_index")
+    _append_ivf(df, table, p, centroids)
+
+
+def _check_query_dims(qvecs: dict[int, list[int]], dim: int,
+                      fn_name: str) -> None:
+    """Query-vector dimension guard AGAINST THE INDEX (r13 advisor
+    finding): the driver-side probe-cell ranking and ADC tables zip()
+    and silently truncate, and _dist2's zip_with null-pads, so a
+    wrong-dimension query would yield wrong cells / biased distances
+    instead of an error — the same condition write/append raise on
+    per row."""
+    wrong = {qi: len(v) for qi, v in qvecs.items() if len(v) != dim}
+    if wrong:
+        raise ValueError(
+            f"{fn_name}: query vector dimension mismatch against "
+            f"index dimension {dim}: "
+            f"{dict(sorted(wrong.items())[:3])!r}"
+            f"{'…' if len(wrong) > 3 else ''}"
+        )
 
 
 def ivf_probe_index(
@@ -746,16 +762,7 @@ def ivf_probe_index(
     under later churn (the dataset-versioning contract; see
     ``_snapshot``).  Run compaction only once no consumer needs
     asof reads below the applied tombstones."""
-    query_ids = list(query_ids)
-    bad = [qi for qi in query_ids
-           if not isinstance(qi, int) or isinstance(qi, bool)]
-    if bad:
-        raise TypeError(
-            f"ivf_probe_index: query_ids must be Python ints; got "
-            f"{bad[:3]!r}{'…' if len(bad) > 3 else ''}"
-        )
-    if len(set(query_ids)) != len(query_ids):
-        raise ValueError("ivf_probe_index: query_ids contains duplicates")
+    query_ids = _check_query_ids(query_ids, "ivf_probe_index")
     if len(query_ids) > max_queries:
         raise ValueError(
             f"ivf_probe_index: {len(query_ids)} query ids, over "
@@ -763,7 +770,6 @@ def ivf_probe_index(
         )
     p = _read_stamp(spark, table)
     centroids = _load_centroids(spark, table)
-    dim = len(centroids[0])
     spark.catalog.refreshTable(table)
     post = _snapshot(spark, table, p["id_col"], asof_seq)
     id_col = p["id_col"]
@@ -787,66 +793,19 @@ def ivf_probe_index(
         # pre-twin index (format note): fetch from the postings by id
         # — one unpruned scan, the documented fallback
         src_rows = post.filter(F.col(id_col).isin(query_ids)).collect()
-    qrows = {r[id_col]: list(r["q"]) for r in src_rows}
-    missing = [qi for qi in query_ids if qi not in qrows]
-    if missing:
-        where = "queries frame" if queries is not None else "index"
-        raise ValueError(f"query ids not in {where}: {missing}")
-    # dimension guard AGAINST THE STORED CENTROIDS (r13 advisor
-    # finding): the driver-side zip() in the probe-cell ranking
-    # silently truncates and _dist2's zip_with null-pads, so a
-    # wrong-dimension query would yield wrong cells / biased
-    # distances instead of an error — the same condition write/append
-    # raise on per row
-    wrong = {qi: len(v) for qi, v in qrows.items() if len(v) != dim}
-    if wrong:
-        raise ValueError(
-            f"ivf_probe_index: query vector dimension mismatch against "
-            f"index dimension {dim}: "
-            f"{dict(sorted(wrong.items())[:3])!r}"
-            f"{'…' if len(wrong) > 3 else ''}"
-        )
-
-    def _probe_cells(qi):
-        qv = qrows[qi]
-        ranked = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qv, c)), ci)
-            for ci, c in enumerate(centroids)
-        )
-        return [ci for _, ci in ranked[: min(nprobe, len(centroids))]]
-
-    all_cells = sorted({c for qi in query_ids for c in _probe_cells(qi)})
-    per_query = F.array(*[
-        F.struct(
-            F.lit(qi).cast("bigint").alias("query_id"),
-            F.when(
-                F.col("cell").isin(_probe_cells(qi)),
-                _dist2(bigint_array_lit(qrows[qi]), F.col("q")),
-            ).alias("score_d2"),
-        )
-        for qi in query_ids
-    ])
-    scored = (
-        post.filter(F.col("cell").isin(all_cells))  # bucket-pruned
-        .select(
-            F.col(id_col).alias("neighbour_id"),
-            F.explode(per_query).alias("__e"),
-        )
-        .select("__e.query_id", "neighbour_id", "__e.score_d2")
-        .filter(
-            F.col("score_d2").isNotNull()
-            & (F.col("neighbour_id") != F.col("query_id"))
-        )
+    qvecs = _query_vectors(
+        src_rows, query_ids, id_col,
+        "queries frame" if queries is not None else "index",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_d2").asc(), F.col("neighbour_id").asc()
+    _check_query_dims(qvecs, len(centroids[0]), "ivf_probe_index")
+    probes = {qi: _probe_cells(qv, centroids, nprobe)
+              for qi, qv in qvecs.items()}
+    all_cells = sorted({c for cells in probes.values() for c in cells})
+    scored = _explode_scores(
+        post.filter(F.col("cell").isin(all_cells)),  # bucket-pruned
+        id_col, _ivf_scores(qvecs, probes, F.col("cell"), F.col("q")),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbour_id", "score_d2",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk_d2(scored, k)
 
 
 def _churn_fold(tomb: DataFrame | None, id_col: str,
@@ -954,42 +913,16 @@ def compact_ivf_index(spark, table: str) -> tuple[int, int]:
 # probes are ADC lookup-table scans of the codes table.  Unlike IVF
 # there is no pruning key — ADC's linear scan IS the design — so the
 # table buckets on the id column purely for the append/compact file
-# protocol (and bucket-pruned id lookups).
+# protocol (and bucket-pruned id lookups).  Everything but the model
+# and its encoder is shared with IVF: the stamp writer/reader (``pq.``
+# prefix, ``_PQ_KEYS`` spec), the delete body, the tombstone/snapshot
+# machinery, and the quantize-plus-dim-guard; the encoder, ADC scores
+# and top-k tail are the ``kmeans`` ones ``similarity.pq_topk`` uses.
 # ---------------------------------------------------------------------------
-
-_PQ = "pq."
-_PQ_KEYS = ("m", "k_codes", "n_iter", "scale", "offset", "seed",
-            "id_col", "vec_col", "dim", "next_seq")
 
 
 def _pq_codebooks_table(table: str) -> str:
     return f"{table}__codebooks"
-
-
-def _read_pq_stamp(spark, table: str) -> dict:
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
-    missing = [k for k in _PQ_KEYS if _PQ + k not in props]
-    if missing:
-        raise ValueError(
-            f"{table} is not a PQ index table (missing properties "
-            f"{[_PQ + k for k in missing]}); create it with "
-            f"write_pq_index"
-        )
-    return {
-        "m": int(props[_PQ + "m"]),
-        "k_codes": int(props[_PQ + "k_codes"]),
-        "n_iter": int(props[_PQ + "n_iter"]),
-        "scale": float(props[_PQ + "scale"]),
-        "offset": float(props[_PQ + "offset"]),
-        "seed": props[_PQ + "seed"],
-        "id_col": props[_PQ + "id_col"],
-        "vec_col": props[_PQ + "vec_col"],
-        "dim": int(props[_PQ + "dim"]),
-        "next_seq": int(props[_PQ + "next_seq"]),
-    }
 
 
 def _load_codebooks(spark, table: str, m: int) -> list[list[list[int]]]:
@@ -1009,36 +942,13 @@ def _pq_codes(df: DataFrame, id_col: str, vec_col: str,
               books: list[list[list[int]]], sub: int, scale: float,
               offset: float, seq: int) -> DataFrame:
     """Encode one batch: m argmin codes per row against the literal
-    codebooks — nested HOFs, whole-stage codegen, no shuffle before
-    the bucketed write's own redistribution.  Vector dimension is
-    checked per row (slices truncate silently otherwise)."""
-    dim = len(books) * sub
-    q = _quantize(F.col(vec_col), scale, offset)
-    guarded = F.when(
-        F.size(F.col(vec_col)) != F.lit(dim),
-        F.raise_error(
-            F.format_string(
-                f"pq index: vector for {id_col} %s has dimension %s, "
-                f"index dimension is {dim}",
-                F.col(id_col).cast("string"),
-                F.size(F.col(vec_col)).cast("string"),
-            )
-        ).cast("array<bigint>"),
-    ).otherwise(q)
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), guarded.alias("__q")
-    )
-
-    def code_expr(s: int):
-        cluster, _ = assign_expr(
-            books[s], F.slice(F.col("__q"), s * sub + 1, sub)
-        )
-        return cluster.cast("int")
-
-    return base.select(
-        id_col,
-        F.array(*[code_expr(s) for s in range(len(books))]).alias("codes"),
-        F.lit(int(seq)).cast("bigint").alias("seq"),
+    codebooks (the shared :func:`kmeans._pq_encode`) over the guarded
+    quantized frame — nested HOFs, whole-stage codegen, no shuffle
+    before the bucketed write's own redistribution."""
+    qdf = _quantized(df, id_col, vec_col, len(books) * sub, scale,
+                     offset, seq, kind="pq")
+    return qdf.select(
+        id_col, _pq_encode(F.col("q"), books, sub).alias("codes"), "seq"
     )
 
 
@@ -1067,12 +977,7 @@ def write_pq_index(
     on retry."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    id_type = df.schema[id_col].dataType.simpleString()
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"write_pq_index: id column {id_col!r} must be integral; "
-            f"got {id_type}"
-        )
+    _check_id_col(df, id_col, "write_pq_index")
     spark = df.sparkSession
     ctable = _pq_codebooks_table(table)
     _reclaim_orphans(spark, table, (ctable, _tombstones_table(table)))
@@ -1103,24 +1008,26 @@ def write_pq_index(
         "subspace int, code int, c array<bigint>",
     ).write.mode("overwrite").saveAsTable(ctmp)
     spark.sql(f"ALTER TABLE {ctmp} RENAME TO {ctable}")
-    (
-        _pq_codes(df, id_col, vec_col, books, sub, scale, offset, seq=0)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, id_col)
-        .sortBy(id_col)
-        .saveAsTable(ptmp)
+    _save_bucketed(
+        _pq_codes(df, id_col, vec_col, books, sub, scale, offset, seq=0),
+        ptmp, id_col, num_buckets, "overwrite",
     )
-    _stamp_pq(spark, ptmp, params)
+    _stamp(spark, ptmp, _PQ, params)
     spark.sql(f"ALTER TABLE {ptmp} RENAME TO {table}")
 
 
-def _stamp_pq(spark, table: str, params: dict) -> None:
-    kv = ", ".join(
-        "'{}{}' = '{}'".format(_PQ, k, str(v).replace("'", "''"))
-        for k, v in sorted(params.items())
+def _append_pq(df: DataFrame, table: str, p: dict,
+               books: list[list[list[int]]]) -> None:
+    """The PQ append body, at the stamped ``next_seq``: encode with the
+    stored codebooks, append the codes, bump the seq."""
+    spark = df.sparkSession
+    _save_bucketed(
+        _pq_codes(df, p["id_col"], p["vec_col"], books, p["dim"] // p["m"],
+                  p["scale"], p["offset"], seq=p["next_seq"]),
+        table, p["id_col"], _num_buckets(spark, table), "append",
     )
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
+    _bump_next_seq(spark, table, _PQ, p["next_seq"])
+    spark.catalog.refreshTable(table)
 
 
 def append_to_pq_index(df: DataFrame, table: str) -> None:
@@ -1128,40 +1035,15 @@ def append_to_pq_index(df: DataFrame, table: str) -> None:
     retrain, one map-only pass over the increment) and append with
     the bucket spec preserved."""
     spark = df.sparkSession
-    p = _read_pq_stamp(spark, table)
-    books = _load_codebooks(spark, table, p["m"])
-    sub = p["dim"] // p["m"]
-    n_buckets = _num_buckets(spark, table)
-    (
-        _pq_codes(df, p["id_col"], p["vec_col"], books, sub,
-                  p["scale"], p["offset"], seq=p["next_seq"])
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, p["id_col"])
-        .sortBy(p["id_col"])
-        .saveAsTable(table)
-    )
-    _bump_next_seq(spark, table, _PQ, p["next_seq"])
-    spark.catalog.refreshTable(table)
+    p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
+    _append_pq(df, table, p, _load_codebooks(spark, table, p["m"]))
 
 
 def delete_from_pq_index(spark, table: str, ids: Sequence[int]) -> None:
     """Tombstone-delete code rows by id — :func:`delete_from_ivf_index`
     applied to the codes table; :func:`compact_pq_index` applies the
     tombstones physically."""
-    ids = list(ids)
-    bad = [i for i in ids if not isinstance(i, int) or isinstance(i, bool)]
-    if bad:
-        raise TypeError(
-            f"delete_from_pq_index: ids must be Python ints; got "
-            f"{bad[:3]!r}{'…' if len(bad) > 3 else ''}"
-        )
-    p = _read_pq_stamp(spark, table)
-    ids_df = local_df(
-        spark, [(int(i),) for i in ids], f"{p['id_col']} bigint"
-    )
-    _append_tombstones(spark, table, p["id_col"], ids_df, p["next_seq"])
-    _bump_next_seq(spark, table, _PQ, p["next_seq"])
+    _delete(spark, table, ids, "delete_from_pq_index", _PQ, _PQ_KEYS)
 
 
 def upsert_to_pq_index(df: DataFrame, table: str) -> None:
@@ -1170,28 +1052,10 @@ def upsert_to_pq_index(df: DataFrame, table: str) -> None:
     codebooks; same crash discipline (tombstones first, prefer-missing)
     and NULL-vector raise as :func:`upsert_to_ivf_index`."""
     spark = df.sparkSession
-    p = _read_pq_stamp(spark, table)
+    p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
     books = _load_codebooks(spark, table, p["m"])
-    sub = p["dim"] // p["m"]
-    n_buckets = _num_buckets(spark, table)
-    seq = p["next_seq"]
-    _append_tombstones(
-        spark, table, p["id_col"],
-        _upsert_ids(df, p["id_col"], p["vec_col"],
-                    "upsert_to_pq_index"),
-        seq,
-    )
-    (
-        _pq_codes(df, p["id_col"], p["vec_col"], books, sub,
-                  p["scale"], p["offset"], seq=seq)
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, p["id_col"])
-        .sortBy(p["id_col"])
-        .saveAsTable(table)
-    )
-    _bump_next_seq(spark, table, _PQ, seq)
-    spark.catalog.refreshTable(table)
+    _upsert_tombstones(df, table, p, "upsert_to_pq_index")
+    _append_pq(df, table, p, books)
 
 
 def pq_probe_index(
@@ -1210,14 +1074,15 @@ def pq_probe_index(
     each code row's approximate distance is m array lookups — map-only
     scan of the codes table, per-query top-k WindowGroupLimit-pruned.
     ``max_queries`` bounds the driver collect loudly."""
-    p = _read_pq_stamp(spark, table)
-    m, sub = p["m"], p["dim"] // p["m"]
-    books = _load_codebooks(spark, table, m)
+    p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
+    books = _load_codebooks(spark, table, p["m"])
     id_col, vec_col = p["id_col"], p["vec_col"]
-    q = _quantize(F.col(vec_col), p["scale"], p["offset"])
     qrows = (
         queries.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), q.alias("__q"))
+        .select(
+            F.col(id_col),
+            _quantize(F.col(vec_col), p["scale"], p["offset"]).alias("q"),
+        )
         .limit(int(max_queries) + 1)
         .collect()
     )
@@ -1226,61 +1091,15 @@ def pq_probe_index(
             f"pq_probe_index: more than max_queries={max_queries} "
             f"query rows; probe in bounded batches"
         )
-    ids = [r[id_col] for r in qrows]
-    if len(set(ids)) != len(ids):
-        raise ValueError("pq_probe_index: duplicate query ids")
-    qvec = {r[id_col]: list(r["__q"]) for r in qrows}
-    # dimension guard against the stamped dim (r13 advisor finding):
-    # the driver-side adc() zip would silently truncate a wrong-width
-    # query into biased lookup tables instead of raising
-    wrong = {qi: len(v) for qi, v in qvec.items() if len(v) != p["dim"]}
-    if wrong:
-        raise ValueError(
-            f"pq_probe_index: query vector dimension mismatch against "
-            f"index dimension {p['dim']}: "
-            f"{dict(sorted(wrong.items())[:3])!r}"
-            f"{'…' if len(wrong) > 3 else ''}"
-        )
-
-    def adc(qi, s):
-        qs = qvec[qi][s * sub:(s + 1) * sub]
-        return [
-            sum((a - b) * (a - b) for a, b in zip(qs, c))
-            for c in books[s]
-        ]
-
-    per_query = F.array(*[
-        F.struct(
-            F.lit(qi).cast("bigint").alias("query_id"),
-            sum(
-                F.element_at(
-                    bigint_array_lit(adc(qi, s)),
-                    F.element_at(F.col("codes"), s + 1) + 1,
-                )
-                for s in range(m)
-            ).cast("bigint").alias("approx_d2"),
-        )
-        for qi in ids
-    ])
+    ids = _check_query_ids([r[id_col] for r in qrows], "pq_probe_index")
+    qvecs = _query_vectors(qrows, ids, id_col, "queries frame")
+    _check_query_dims(qvecs, p["dim"], "pq_probe_index")
     spark.catalog.refreshTable(table)
-    live = _snapshot(spark, table, id_col, asof_seq)
-    scored = (
-        live
-        .select(F.col(id_col).alias("neighbour_id"),
-                F.explode(per_query).alias("__e"))
-        .select("__e.query_id", "neighbour_id", "__e.approx_d2")
-        .filter(F.col("neighbour_id") != F.col("query_id"))
+    scored = _explode_scores(
+        _snapshot(spark, table, id_col, asof_seq), id_col,
+        _adc_scores(qvecs, books, p["dim"] // p["m"], F.col("codes")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("neighbour_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbour_id",
-                F.col("approx_d2").alias("score_d2"),
-                F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk_d2(scored, k)
 
 
 def compact_pq_index(spark, table: str) -> tuple[int, int]:
@@ -1290,7 +1109,7 @@ def compact_pq_index(spark, table: str) -> tuple[int, int]:
     dropped, redelivered duplicates collapsed on ``(id, codes)`` to
     their max seq, folded tombstones cleared with concurrent ones
     preserved (loud).  Run in a mutation quiet window."""
-    p = _read_pq_stamp(spark, table)
+    p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
     id_col = p["id_col"]
     cutoff = p["next_seq"]
     tomb = _tombstone_maxseq(spark, table, id_col)

@@ -1,4 +1,5 @@
-"""Distributed deterministic k-means over embedding columns.
+"""Distributed deterministic k-means, and the fixed-point quantizer core
+every IVF/PQ path shares.
 
 The missing piece between the ANN family (similarity.py — which trains
 its IVF centroids driver-side on a small *sample*) and corpus curation:
@@ -14,11 +15,18 @@ Spark ML's KMeans but engine-deterministic):
   its argmin cell with a single nested higher-order function (one
   ``transform`` over centroids around one ``zip_with``/``aggregate``
   dot — compact whole-stage codegen, no UDF, no join, no shuffle).
-* **update is one bounded shuffle** — ``groupBy(cluster)`` with ``d``
-  per-dimension integer ``sum`` aggregates (map-side partial combine),
-  producing exactly ``k`` rows that are collected to the driver
-  (k·d ≪ memory; the same treeAggregate-to-driver pattern Spark ML
-  uses).  Per iteration: one shuffle of k rows, nothing else moves.
+* **update is one bounded shuffle** — ``groupBy(subspace, cluster)``
+  with ``d`` per-dimension integer ``sum`` aggregates (map-side
+  partial combine), producing at most ``m·k`` rows that are collected
+  to the driver (the same treeAggregate-to-driver pattern Spark ML
+  uses).  Per iteration: one shuffle of m·k rows, nothing else moves.
+
+**One engine.**  :func:`_lloyd` trains ``m`` codebooks at once over a
+frame holding one row per (vector, subspace); plain k-means is the
+``m = 1`` case (no slicing, seed string ``seed``), a product quantizer
+the ``m``-subspace case (slice ``s``, seed string ``f"{seed}{s}"``).
+Seeding is one per-subspace ``row_number`` action, and each iteration
+one ``groupBy(__sub, cluster)`` action, whatever ``m`` is.
 
 Determinism & oracle portability (the repo's fixed-point recipe —
 cf. functions/vectors.py:dot_fixed, graph.py:pagerank exact tier):
@@ -36,13 +44,27 @@ cf. functions/vectors.py:dot_fixed, graph.py:pagerank exact tier):
 Every step is therefore bit-reproducible across engines, partitionings
 and cluster sizes, and a DuckDB oracle can replay the full iteration
 history as unrolled CTEs.
+
+**Shared ANN pieces.**  The in-query ANN paths
+(``similarity.ivf_topk_fixed``/``pq_topk``) and the persisted index
+(``ann_index``) encode, probe and rank through the helpers below, so
+the cross-engine contract lives in one place: the PQ code encoder
+(:func:`_pq_encode`), driver-side probe-cell ranking and ADC tables,
+the per-query IVF/ADC score struct arrays, the query-id and
+query-vector checks, and the ascending ``(score_d2, neighbour_id)``
+top-k tail every fixed-point ANN result ends with.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..functions.expressions import bigint_array_lit, bigint_matrix_lit
 
 
 def _quantize(vec: Column, scale: float, offset: float) -> Column:
@@ -69,9 +91,9 @@ def assign_expr(
 ) -> tuple[Column, Column]:
     """(cluster, dist2) argmin expressions for a quantized vector
     column against literal centroids — THE assignment shape, shared by
-    the Lloyd's loop, :func:`kmeans_fixed`'s final select, and
-    similarity.pq_topk's subspace encoder so the tie rule (first =
-    smallest cluster id) and the HOF arity live in exactly one place.
+    the Lloyd's loop, :func:`kmeans_fixed`'s final select, and the PQ
+    encoder :func:`_pq_encode`, so the tie rule (first = smallest
+    cluster id) and the HOF arity live in exactly one place.
     The transform lambda must stay ONE-argument: a second parameter —
     even a ``_s=s`` default used to bind a loop variable — makes
     PySpark pass the ARRAY INDEX to it (HOF arity is inferred from the
@@ -91,8 +113,6 @@ def assign_expr(
     elimination already dedups the repeated subtree here, unlike the
     captured-operand-per-element blowups bind_once exists for;
     rejected."""
-    from ..functions.expressions import bigint_matrix_lit
-
     cents = bigint_matrix_lit(centroids)
     dists = F.transform(cents, lambda c: _dist2(q, c))
     return (
@@ -101,41 +121,221 @@ def assign_expr(
     )
 
 
+# ---------------------------------------------------------------------------
+# shared ANN pieces: encode, probe, score, rank
+# ---------------------------------------------------------------------------
+
+
+def _pq_encode(q: Column, books: list[list[list[int]]], sub: int) -> Column:
+    """``array<int>`` of the ``m`` PQ codes of a quantized vector: per
+    subspace ``s``, the argmin code of ``slice(q, s*sub+1, sub)``
+    against literal codebook ``s`` — one map-only expression, the
+    ``codes`` column of both ``similarity.pq_topk`` and the persisted
+    PQ index."""
+    return F.array(*[
+        assign_expr(book, F.slice(q, s * sub + 1, sub))[0]
+        for s, book in enumerate(books)
+    ])
+
+
+def _sqdist(a: Sequence[int], b: Sequence[int]) -> int:
+    """Driver-side exact squared distance — :func:`_dist2` in Python."""
+    return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+
+def _probe_cells(qv: list[int], centroids: list[list[int]],
+                 nprobe: int) -> list[int]:
+    """A query's ``nprobe`` nearest cells by exact integer distance,
+    ties to the smaller cell id (the oracle's ``ORDER BY d2, cluster``)."""
+    ranked = sorted((_sqdist(qv, c), ci) for ci, c in enumerate(centroids))
+    return [ci for _, ci in ranked[:nprobe]]
+
+
+def _adc_tables(qv: list[int], books: list[list[list[int]]],
+                sub: int) -> list[list[int]]:
+    """The ``m`` exact ADC lookup tables of a query: table ``s`` holds
+    the squared distance of the query's slice ``s`` to every code."""
+    return [
+        [_sqdist(qv[s * sub:(s + 1) * sub], c) for c in book]
+        for s, book in enumerate(books)
+    ]
+
+
+def _ivf_scores(qvecs: dict[int, list[int]], probes: dict[int, list[int]],
+                cell: Column, q: Column) -> Column:
+    """Per-row array of ``(query_id, score_d2)`` structs, one per query:
+    the exact squared distance when the row's ``cell`` is one of the
+    query's probed cells, else NULL (unprobed rows never evaluate it)."""
+    return F.array(*[
+        F.struct(
+            F.lit(qi).cast("bigint").alias("query_id"),
+            F.when(
+                cell.isin(probes[qi]), _dist2(bigint_array_lit(qv), q)
+            ).alias("score_d2"),
+        )
+        for qi, qv in qvecs.items()
+    ])
+
+
+def _adc_scores(qvecs: dict[int, list[int]], books: list[list[list[int]]],
+                sub: int, codes: Column) -> Column:
+    """Per-row array of ``(query_id, score_d2)`` structs, one per query:
+    the ADC estimate, i.e. the sum over subspaces of the query's table
+    entry at the row's code — ``m`` array lookups, map-only."""
+    return F.array(*[
+        F.struct(
+            F.lit(qi).cast("bigint").alias("query_id"),
+            sum(
+                F.element_at(
+                    bigint_array_lit(table), F.element_at(codes, s + 1) + 1
+                )
+                for s, table in enumerate(_adc_tables(qv, books, sub))
+            ).cast("bigint").alias("score_d2"),
+        )
+        for qi, qv in qvecs.items()
+    ])
+
+
+def _explode_scores(rows: DataFrame, id_col: str,
+                    scores: Column) -> DataFrame:
+    """``(query_id, neighbour_id, score_d2)`` candidates from a per-row
+    score array: NULL scores (unprobed) and self-matches dropped."""
+    return (
+        rows.select(
+            F.col(id_col).alias("neighbour_id"),
+            F.explode(scores).alias("__e"),
+        )
+        .select("__e.query_id", "neighbour_id", "__e.score_d2")
+        .filter(
+            F.col("score_d2").isNotNull()
+            & (F.col("neighbour_id") != F.col("query_id"))
+        )
+    )
+
+
+def _topk_d2(scored: DataFrame, k: int) -> DataFrame:
+    """The fixed-point ANN result tail: per query, the ``k`` smallest
+    ``(score_d2, neighbour_id)`` as ``(query_id, neighbour_id,
+    score_d2, rank int)`` — a ``row_number`` window Catalyst prunes
+    map-side (WindowGroupLimit, see skew.grouped_topk)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score_d2").asc(), F.col("neighbour_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbour_id", "score_d2",
+                F.col("rank").cast("int").alias("rank"))
+    )
+
+
+def _check_query_ids(query_ids: Sequence, fn_name: str) -> list[int]:
+    """Query ids become bigint literals: a non-integral id would cast to
+    NULL and silently empty the result, and a duplicated id would
+    double-emit every candidate (one struct per list element) and
+    halve the effective top-k — both raise instead."""
+    query_ids = list(query_ids)
+    bad = [qi for qi in query_ids
+           if not isinstance(qi, int) or isinstance(qi, bool)]
+    if bad:
+        raise TypeError(
+            f"{fn_name}: query_ids must be Python ints; got "
+            f"{bad[:3]!r}{'…' if len(bad) > 3 else ''} (non-integral ids "
+            f"would cast to NULL and silently empty the result)"
+        )
+    if len(set(query_ids)) != len(query_ids):
+        raise ValueError(f"{fn_name}: query_ids contains duplicates")
+    return query_ids
+
+
+def _check_id_col(df: DataFrame, id_col: str, fn_name: str) -> None:
+    """The id column is compared against bigint query-id literals."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise TypeError(
+            f"{fn_name}: id column {id_col!r} must be integral to "
+            f"compare against bigint query_id literals; got {id_type}"
+        )
+
+
+def _query_vectors(rows: list, query_ids: list[int], id_col: str,
+                   where: str) -> dict[int, list[int]]:
+    """``{query_id: quantized q}`` in ``query_ids`` order from collected
+    ``(id_col, q)`` rows; raises naming any id the source lacks."""
+    got = {r[id_col]: list(r["q"]) for r in rows}
+    missing = [qi for qi in query_ids if qi not in got]
+    if missing:
+        raise ValueError(f"query ids not in {where}: {missing}")
+    return {qi: got[qi] for qi in query_ids}
+
+
+# ---------------------------------------------------------------------------
+# the Lloyd's engine
+# ---------------------------------------------------------------------------
+
+
 def _quantized_frame(
     df: DataFrame, id_col: str, vec_col: str,
-    scale: float, offset: float, seed: str,
+    scale: float, offset: float, seeds: list[str], sub: int | None,
 ) -> DataFrame:
-    """(__id, __q, __h): the fixed-point frame every step reads."""
-    h = F.md5(
-        F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
+    """``(__sub, __id, __q, __h)``: one row per (vector, subspace), the
+    frame every engine step reads.  Subspace ``s`` hashes with seed
+    string ``seeds[s]`` and, when ``sub`` is set, quantizes
+    ``slice(vec, s*sub+1, sub)``; ``sub=None`` keeps the whole vector
+    (plain k-means: one seed string, no slicing)."""
+    base = df.filter(F.col(vec_col).isNotNull())
+    frames = []
+    for s, seed in enumerate(seeds):
+        vec = F.col(vec_col)
+        if sub is not None:
+            vec = F.slice(vec, s * sub + 1, sub)
+        h = F.md5(
+            F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
+        )
+        frames.append(base.select(
+            F.lit(s).alias("__sub"),
+            F.col(id_col).alias("__id"),
+            _quantize(vec, scale, offset).alias("__q"),
+            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("__h"),
+        ))
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _lloyd(qdf: DataFrame, m: int, k: int,
+           n_iter: int) -> list[list[list[int]]]:
+    """Train ``m`` codebooks on an already-quantized
+    :func:`_quantized_frame`: per subspace, seeds are the ``k``
+    smallest ``(__h, __id)`` rows in rank order (one action for all
+    subspaces), then ``n_iter`` integer Lloyd's updates, each ONE
+    ``groupBy(__sub, cluster)`` action; empty clusters keep their
+    centroid.  Books hold fewer than ``k`` entries when the corpus is
+    smaller than ``k``, and are all empty on an empty corpus."""
+    rn = F.row_number().over(
+        Window.partitionBy("__sub").orderBy("__h", "__id")
     )
-    return df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("__id"),
-        _quantize(F.col(vec_col), scale, offset).alias("__q"),
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("__h"),
+    seed_rows = (
+        qdf.select("__sub", "__q", rn.alias("__rn"))
+        .filter(F.col("__rn") <= k)
+        .collect()
     )
-
-
-def _lloyd(qdf: DataFrame, k: int, n_iter: int) -> list[list[int]]:
-    """Train on an already-quantized frame; returns the final centroids
-    (hash-seeded, integer updates, empty clusters keep their centroid —
-    the module-docstring recipe).  Shared by :func:`kmeans_fixed` and
-    :func:`train_kmeans_fixed` so the PQ/IVF callers train EXACTLY the
-    assignment the oracle replays."""
-    seeds = qdf.orderBy("__h", "__id").limit(k).select("__q").collect()
-    centroids = [list(r["__q"]) for r in seeds]
-    k = len(centroids)
-    if k == 0:
-        return []
-    dim = len(centroids[0])
-
-    def assign() -> DataFrame:
-        cluster, _ = assign_expr(centroids, F.col("__q"))
-        return qdf.select("__q", cluster.alias("cluster"))
-
+    books: list[list[list[int]]] = [[] for _ in range(m)]
+    for r in sorted(seed_rows, key=lambda r: (r["__sub"], r["__rn"])):
+        books[r["__sub"]].append(list(r["__q"]))
+    if any(not b for b in books):
+        # an empty corpus empties every subspace (same rows)
+        return books
+    dim = len(books[0][0])
     for _ in range(n_iter):
+        cluster = None
+        for s, book in enumerate(books):
+            c, _d = assign_expr(book, F.col("__q"))
+            cluster = (
+                c if cluster is None
+                else F.when(F.col("__sub") == s, c).otherwise(cluster)
+            )
         stats = (
-            assign().groupBy("cluster")
+            qdf.select("__sub", "__q", cluster.alias("cluster"))
+            .groupBy("__sub", "cluster")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 *[F.sum(F.element_at("__q", i + 1)).alias(f"s{i}")
@@ -144,10 +344,25 @@ def _lloyd(qdf: DataFrame, k: int, n_iter: int) -> list[list[int]]:
             .collect()
         )
         for r in stats:
-            c, n = r["cluster"], r["n"]
             # non-negative sums: truncating div == floor div (oracle //)
-            centroids[c] = [int(r[f"s{i}"]) // n for i in range(dim)]
-    return centroids
+            books[r["__sub"]][r["cluster"]] = [
+                int(r[f"s{i}"]) // r["n"] for i in range(dim)
+            ]
+    return books
+
+
+def _train(df: DataFrame, id_col: str, vec_col: str, scale: float,
+           offset: float, seeds: list[str], sub: int | None, k: int,
+           n_iter: int) -> list[list[list[int]]]:
+    """Quantize once, persist (every Lloyd's step re-reads the frame),
+    train, unpersist."""
+    qdf = _quantized_frame(
+        df, id_col, vec_col, scale, offset, seeds, sub
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return _lloyd(qdf, len(seeds), k, n_iter)
+    finally:
+        qdf.unpersist(blocking=False)
 
 
 def train_pq_codebooks(
@@ -173,90 +388,18 @@ def train_pq_codebooks(
     centroid argmin applied per subspace, and centroid updates are the
     same per-subspace integer floor-divided sums.
 
-    What fuses (the r15 optimization): the sequential path persists m
-    sliced frames and runs m·(1 seed + n_iter update) driver actions —
-    at corpus scale that is m·(n_iter+1) passes over the vector bytes;
-    here ONE persisted frame holds all m quantized slices (same total
-    bytes as the corpus: m rows of dim/m elements per vector) and each
-    Lloyd's step is ONE action for all subspaces (seeds via a
-    per-subspace rank, updates via one groupBy(subspace, cluster)),
-    i.e. (n_iter+1) passes and (n_iter+1) actions regardless of m.
+    ONE persisted frame holds all m quantized slices (same total bytes
+    as the corpus: m rows of dim/m elements per vector) and each
+    Lloyd's step is ONE action for all subspaces, i.e. (n_iter+1)
+    passes and (n_iter+1) actions regardless of m.
 
     Returns ``m`` codebooks (possibly with fewer than ``k`` entries
     when the corpus is smaller than ``k``; empty on an empty corpus —
     the train_kmeans_fixed contract, per subspace)."""
-    from pyspark.sql import Window
-
-    slices = []
-    base = df.filter(F.col(vec_col).isNotNull())
-    for s in range(m):
-        h = F.md5(
-            F.concat_ws(
-                ":", F.col(id_col).cast("string"), F.lit(f"{seed}{s}")
-            )
-        )
-        slices.append(
-            base.select(
-                F.lit(s).alias("__sub"),
-                F.col(id_col).alias("__id"),
-                _quantize(
-                    F.slice(F.col(vec_col), s * sub + 1, sub),
-                    scale, offset,
-                ).alias("__q"),
-                F.conv(F.substring(h, 1, 8), 16, 10)
-                .cast("bigint")
-                .alias("__h"),
-            )
-        )
-    qdf = slices[0]
-    for sl in slices[1:]:
-        qdf = qdf.unionByName(sl)
-    qdf = qdf.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # ---- seeds: the k smallest (__h, __id) rows per subspace, in
-        # rank order — one action for all m subspaces
-        rn = F.row_number().over(
-            Window.partitionBy("__sub").orderBy("__h", "__id")
-        )
-        seed_rows = (
-            qdf.select("__sub", "__q", rn.alias("__rn"))
-            .filter(F.col("__rn") <= k)
-            .collect()
-        )
-        books: list[list[list[int]]] = [[] for _ in range(m)]
-        for r in sorted(seed_rows, key=lambda r: (r["__sub"], r["__rn"])):
-            books[r["__sub"]].append(list(r["__q"]))
-        if any(not b for b in books):
-            # an empty corpus empties EVERY subspace (same rows); the
-            # sequential path returns [] per subspace
-            return books
-        # ---- Lloyd's: one assignment+update action per iteration for
-        # all m subspaces; per-subspace math identical to _lloyd
-        for _ in range(n_iter):
-            cluster = None
-            for s in range(m):
-                c, _d = assign_expr(books[s], F.col("__q"))
-                cluster = (
-                    c if cluster is None
-                    else F.when(F.col("__sub") == s, c).otherwise(cluster)
-                )
-            stats = (
-                qdf.select("__sub", "__q", cluster.alias("cluster"))
-                .groupBy("__sub", "cluster")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(F.element_at("__q", i + 1)).alias(f"s{i}")
-                      for i in range(sub)],
-                )
-                .collect()
-            )
-            for r in stats:
-                s, c, n = r["__sub"], r["cluster"], r["n"]
-                # non-negative sums: truncating div == floor div
-                books[s][c] = [int(r[f"s{i}"]) // n for i in range(sub)]
-        return books
-    finally:
-        qdf.unpersist(blocking=False)
+    return _train(
+        df, id_col, vec_col, scale, offset,
+        [f"{seed}{s}" for s in range(m)], sub, k, n_iter,
+    )
 
 
 def train_kmeans_fixed(
@@ -271,15 +414,12 @@ def train_kmeans_fixed(
 ) -> list[list[int]]:
     """Train-only entry point: the final QUANTIZED centroids as plain
     Python ints (k·d numbers — driver-safe by construction), for
-    callers that assign with their own expressions (PQ codebooks,
-    IVF cells).  Same deterministic recipe as :func:`kmeans_fixed`."""
-    qdf = _quantized_frame(df, id_col, vec_col, scale, offset, seed).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        return _lloyd(qdf, k, n_iter)
-    finally:
-        qdf.unpersist(blocking=False)
+    callers that assign with their own expressions (IVF cells).  Same
+    deterministic recipe as :func:`kmeans_fixed`; ``[]`` on an empty
+    corpus."""
+    return _train(
+        df, id_col, vec_col, scale, offset, [seed], None, k, n_iter
+    )[0]
 
 
 def kmeans_fixed(
@@ -301,27 +441,25 @@ def kmeans_fixed(
     Vectors must be non-NULL with a uniform dimension (NULL rows are
     dropped up front: a NULL distance would order differently under
     Spark's NULLS FIRST vs the oracle's NULLS LAST).  Empty clusters
-    keep their previous centroid.  ``k`` is capped at the row count.  Assignment plans as pure map work (literal centroids);
-    each iteration's update is ONE k-row shuffle + a k·d driver collect.
+    keep their previous centroid.  ``k`` is capped at the row count.
+    Assignment plans as pure map work (literal centroids); each
+    iteration's update is ONE k-row shuffle + a k·d driver collect.
     """
-    # quantize once and persist: every iteration re-reads this frame
-    qdf = _quantized_frame(df, id_col, vec_col, scale, offset, seed).persist(
-        StorageLevel.MEMORY_AND_DISK
+    centroids = train_kmeans_fixed(
+        df, id_col, vec_col, k, n_iter, scale, offset, seed
     )
-    try:
-        centroids = _lloyd(qdf, k, n_iter)
-        if not centroids:
-            return df.select(
-                F.col(id_col),
-                F.lit(None).cast("int").alias("cluster"),
-                F.lit(None).cast("bigint").alias("dist2"),
-            ).limit(0)
-        cluster, dist2 = assign_expr(centroids, F.col("__q"))
-        return qdf.select(
-            F.col("__id").alias(id_col),
-            cluster.alias("cluster"),
-            dist2.alias("dist2"),
-        )
-    finally:
-        # lazily unpersist: the returned plan re-derives __q cheaply
-        qdf.unpersist(blocking=False)
+    if not centroids:
+        return df.select(
+            F.col(id_col),
+            F.lit(None).cast("int").alias("cluster"),
+            F.lit(None).cast("bigint").alias("dist2"),
+        ).limit(0)
+    # the training frame is unpersisted: the assignment re-derives __q
+    # lazily from the source
+    qdf = _quantized_frame(df, id_col, vec_col, scale, offset, [seed], None)
+    cluster, dist2 = assign_expr(centroids, F.col("__q"))
+    return qdf.select(
+        F.col("__id").alias(id_col),
+        cluster.alias("cluster"),
+        dist2.alias("dist2"),
+    )

@@ -477,29 +477,21 @@ def ivf_topk_fixed(
     probe ties to the smaller cell id (matching the oracle's
     ``ORDER BY d2, cluster``).
     """
-    from .kmeans import _dist2, _quantize, assign_expr, train_kmeans_fixed
+    from .kmeans import (
+        _check_id_col,
+        _check_query_ids,
+        _explode_scores,
+        _ivf_scores,
+        _probe_cells,
+        _quantize,
+        _query_vectors,
+        _topk_d2,
+        assign_expr,
+        train_kmeans_fixed,
+    )
 
-    bad = [
-        qi for qi in query_ids
-        if not isinstance(qi, int) or isinstance(qi, bool)
-    ]
-    if bad:
-        raise TypeError(
-            f"ivf_topk_fixed: query_ids must be Python ints; got "
-            f"{bad[:3]!r}{'…' if len(bad) > 3 else ''} (non-integral ids "
-            f"would cast to NULL and silently empty the result)"
-        )
-    if len(set(query_ids)) != len(query_ids):
-        # per_query builds one struct per LIST ELEMENT, so a duplicated
-        # id double-emits every candidate and row_number burns half the
-        # top-k on duplicates — silently (r10 self-review finding)
-        raise ValueError("ivf_topk_fixed: query_ids contains duplicates")
-    id_type = df.schema[id_col].dataType.simpleString()
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"ivf_topk_fixed: id column {id_col!r} must be integral to "
-            f"compare against bigint query_id literals; got {id_type}."
-        )
+    query_ids = _check_query_ids(query_ids, "ivf_topk_fixed")
+    _check_id_col(df, id_col, "ivf_topk_fixed")
     base = df.filter(F.col(vec_col).isNotNull())
     train = base
     if train_ppm is not None:
@@ -531,60 +523,22 @@ def ivf_topk_fixed(
             else "training sample is empty — raise train_ppm"
         )
 
-    q = _quantize(F.col(vec_col), scale, offset)
-    cell, _ = assign_expr(centroids, F.col("__q"))
-    assigned = base.select(F.col(id_col), q.alias("__q")).select(
-        id_col, "__q", cell.alias("__cell")
+    quantized = base.select(
+        F.col(id_col), _quantize(F.col(vec_col), scale, offset).alias("q")
     )
-
-    qrows = {
-        r[id_col]: list(r["__q"])
-        for r in base.select(F.col(id_col), q.alias("__q"))
-        .filter(F.col(id_col).isin(list(query_ids)))
-        .collect()
-    }
-    missing = [qi for qi in query_ids if qi not in qrows]
-    if missing:
-        raise ValueError(f"query ids not in corpus: {missing}")
-
-    def _probe_cells(qi):
-        qv = qrows[qi]
-        ranked = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qv, c)), ci)
-            for ci, c in enumerate(centroids)
-        )
-        return [ci for _, ci in ranked[: min(nprobe, len(centroids))]]
-
-    per_query = F.array(*[
-        F.struct(
-            F.lit(qi).cast("bigint").alias("query_id"),
-            F.when(
-                F.col("__cell").isin(_probe_cells(qi)),
-                _dist2(bigint_array_lit(qrows[qi]), F.col("__q")),
-            ).alias("score_d2"),
-        )
-        for qi in query_ids
-    ])
-    scored = (
-        assigned.select(
-            F.col(id_col).alias("neighbour_id"),
-            F.explode(per_query).alias("__e"),
-        )
-        .select("__e.query_id", "neighbour_id", "__e.score_d2")
-        .filter(
-            F.col("score_d2").isNotNull()
-            & (F.col("neighbour_id") != F.col("query_id"))
-        )
+    cell, _ = assign_expr(centroids, F.col("q"))
+    qvecs = _query_vectors(
+        quantized.filter(F.col(id_col).isin(query_ids)).collect(),
+        query_ids, id_col, "corpus",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_d2").asc(), F.col("neighbour_id").asc()
+    probes = {qi: _probe_cells(qv, centroids, nprobe)
+              for qi, qv in qvecs.items()}
+    assigned = quantized.select(id_col, "q", cell.alias("cell"))
+    scored = _explode_scores(
+        assigned, id_col,
+        _ivf_scores(qvecs, probes, F.col("cell"), F.col("q")),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbour_id", "score_d2",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk_d2(scored, k)
 
 
 def expected_bucket_collision_prob(cos_sim: float, num_bits: int) -> float:
@@ -997,123 +951,58 @@ def pq_topk(
     tests/test_similarity_multimodal.py).
     """
     from .kmeans import (
+        _adc_scores,
+        _check_id_col,
+        _check_query_ids,
         _dist2,
+        _explode_scores,
+        _pq_encode,
         _quantize,
-        assign_expr,
+        _query_vectors,
+        _topk_d2,
         train_pq_codebooks,
     )
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    # query_id literals are cast to bigint below; a non-integral id
-    # (string doc ids, floats) would cast to NULL, null-fail the
-    # self-match filter and silently return an EMPTY frame — raise
-    # instead (verdict-advice r9).
-    bad = [
-        qi for qi in query_ids
-        if not isinstance(qi, int) or isinstance(qi, bool)
-    ]
-    if bad:
-        raise TypeError(
-            f"pq_topk: query_ids must be Python ints (bigint id space); "
-            f"got {bad[:3]!r}{'…' if len(bad) > 3 else ''}. Non-integral "
-            f"ids would cast to NULL and silently empty the result."
-        )
-    if len(set(query_ids)) != len(query_ids):
-        # one per-query struct per LIST ELEMENT: a duplicated id
-        # double-emits every candidate and halves the effective top-k
-        raise ValueError("pq_topk: query_ids contains duplicates")
-    id_type = df.schema[id_col].dataType.simpleString()
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"pq_topk: id column {id_col!r} must be an integral type to "
-            f"compare against bigint query_id literals; got {id_type}."
-        )
+    query_ids = _check_query_ids(query_ids, "pq_topk")
+    _check_id_col(df, id_col, "pq_topk")
     sub = dim // m
     base = df.filter(F.col(vec_col).isNotNull())
 
-    # fused trainer (r15): one persisted frame + one action per Lloyd's
-    # step for ALL m subspaces instead of m sequential trainings —
-    # bit-identical books (tests/test_kmeans_mix.py pins it)
+    # fused trainer: one persisted frame + one action per Lloyd's step
+    # for ALL m subspaces
     codebooks = train_pq_codebooks(
         base, id_col, vec_col, m=m, sub=sub, k=k_codes, n_iter=n_iter,
         scale=scale, offset=offset, seed=seed,
     )
 
-    q = _quantize(F.col(vec_col), scale, offset)
-
-    def _code_expr(s: int):
-        # assign_expr holds THE argmin shape (and the one-arg-lambda
-        # arity rule this encoder once violated — see its docstring;
-        # pinned by tests/test_similarity_multimodal.py)
-        cluster, _ = assign_expr(
-            codebooks[s], F.slice(F.col("__q"), s * sub + 1, sub)
-        )
-        return cluster.alias(f"__c{s}")
-
-    enc = base.select(F.col(id_col), q.alias("__q")).select(
-        id_col, *[_code_expr(s) for s in range(m)]
+    quantized = base.select(
+        F.col(id_col), _quantize(F.col(vec_col), scale, offset).alias("q")
     )
-
+    # encode: one map-only pass; the codes array is the persisted PQ
+    # index's column shape, so one ADC expression serves both
+    codes = quantized.select(
+        id_col, _pq_encode(F.col("q"), codebooks, sub).alias("codes")
+    )
     # exact integer ADC tables, driver-side (|Q|·m·k_codes ints)
-    qrows = {
-        r[id_col]: list(r["__q"])
-        for r in base.select(F.col(id_col), q.alias("__q"))
-        .filter(F.col(id_col).isin(list(query_ids)))
-        .collect()
-    }
-    missing = [qi for qi in query_ids if qi not in qrows]
-    if missing:
-        raise ValueError(f"query ids not in corpus: {missing}")
-
-    def adc(qi, s):
-        qs = qrows[qi][s * sub:(s + 1) * sub]
-        return [
-            sum((a - b) * (a - b) for a, b in zip(qs, c))
-            for c in codebooks[s]
-        ]
-
-    per_query = F.array(*[
-        F.struct(
-            F.lit(qi).cast("bigint").alias("query_id"),
-            sum(
-                F.element_at(
-                    bigint_array_lit(adc(qi, s)),
-                    F.col(f"__c{s}") + 1,
-                )
-                for s in range(m)
-            ).cast("bigint").alias("approx_d2"),
-        )
-        for qi in query_ids
-    ])
-    scored = enc.select(
-        F.col(id_col).alias("neighbour_id"), F.explode(per_query).alias("__e")
-    ).select("__e.query_id", "neighbour_id", "__e.approx_d2").filter(
-        F.col("neighbour_id") != F.col("query_id")
+    qvecs = _query_vectors(
+        quantized.filter(F.col(id_col).isin(query_ids)).collect(),
+        query_ids, id_col, "corpus",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("neighbour_id").asc()
+    scored = _explode_scores(
+        codes, id_col, _adc_scores(qvecs, codebooks, sub, F.col("codes"))
     )
     if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbour_id",
-                    F.col("approx_d2").alias("score_d2"),
-                    F.col("rank").cast("int").alias("rank"))
-        )
+        return _topk_d2(scored, k)
     # ADC shortlist → EXACT fixed-point re-rank (the standard FAISS
     # recipe): quantization distortion picks the shortlist, the true
     # integer distance picks the final k.  The shortlist is
     # |Q|·rerank rows; the exact pass joins it back to the quantized
     # vectors once — still engine-replayable, still hash-exact.
-    shortlist = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= rerank)
-        .drop("__rn")
-    )
-    full = base.select(
-        F.col(id_col).alias("neighbour_id"), q.alias("__qv")
+    shortlist = _topk_d2(scored, rerank).select("query_id", "neighbour_id")
+    full = quantized.select(
+        F.col(id_col).alias("neighbour_id"), F.col("q").alias("__qv")
     )
     # the shortlist is ≤ |Q|·rerank rows by construction — hint it as
     # the broadcast side so the CORPUS never shuffles for the re-rank
@@ -1122,20 +1011,11 @@ def pq_topk(
         "query_id", "neighbour_id",
         F.coalesce(*[
             F.when(F.col("query_id") == F.lit(qi),
-                   _dist2(F.array(*[F.lit(v) for v in qrows[qi]]),
-                          F.col("__qv")))
-            for qi in query_ids
+                   _dist2(bigint_array_lit(qv), F.col("__qv")))
+            for qi, qv in qvecs.items()
         ]).alias("score_d2"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score_d2").asc(), F.col("neighbour_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbour_id", "score_d2",
-                F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk_d2(exact, k)
 
 
 def mine_hard_negatives(

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from gdp_etl_spark.functions.expressions import (
     bankers_round,
+    bigint_array_lit,
+    bigint_matrix_lit,
     conditional_overwrite,
     near,
     pad_code,
@@ -72,3 +74,25 @@ def test_prefer_new_is_coalesce(spark):
 def test_ref_date_injectable(spark):
     df = spark.range(1).select(ref_date("2025-08-29").alias("d"))
     assert df.first()["d"] == "29-Aug-25"
+
+
+def test_bigint_literals_exact_or_loud(spark):
+    """Centroid, codebook and query literals must carry exact integers:
+    integral values (ints, integral floats) render as bigint, while a
+    fractional value, an empty array or an empty matrix row raises
+    instead of truncating or parsing as an untyped ``array()``."""
+    got = spark.range(1).select(
+        bigint_array_lit([3, -2, 7.0]).alias("a"),
+        bigint_matrix_lit([[1, 2], [-3, 4.0]]).alias("m"),
+    )
+    assert dict(got.dtypes) == {"a": "array<bigint>",
+                                "m": "array<array<bigint>>"}
+    r = got.first()
+    assert r["a"] == [3, -2, 7] and r["m"] == [[1, 2], [-3, 4]]
+    for bad in ([1, 2.5], [0.999], [float("nan")], [float("inf")],
+                [None], []):
+        with pytest.raises(ValueError, match="bigint literal"):
+            bigint_array_lit(bad)
+    for bad in ([], [[1, 2], []], [[1, 2], [3, 4.5]]):
+        with pytest.raises(ValueError, match="bigint literal"):
+            bigint_matrix_lit(bad)

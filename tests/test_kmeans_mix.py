@@ -303,3 +303,76 @@ def test_train_pq_codebooks_equals_sequential(spark):
         df.limit(0), "id", "vec", m=m, sub=sub, k=5, n_iter=1, seed="pq"
     )
     assert fused_empty == [[] for _ in range(m)]
+
+
+def _lloyd_reference(vecs, k, n_iter, seed):
+    """Pure-Python fixed-point Lloyd's, written from the recipe alone:
+    seeds are the ``k`` ids with the smallest ``md5(id:seed)`` 8-hex
+    prefix (ties by id), distances are exact integer squared sums with
+    ties to the smallest cluster id, updates floor-divide the integer
+    sums, and an empty cluster keeps its centroid.  Returns the final
+    centroids and how many (iteration, cluster) updates found a
+    cluster empty."""
+    def h(i):
+        return int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:8], 16)
+
+    cents = [list(vecs[i]) for i in sorted(vecs, key=lambda i: (h(i), i))[:k]]
+    empty = 0
+    for _ in range(n_iter):
+        sums = [[0] * len(c) for c in cents]
+        counts = [0] * len(cents)
+        for v in vecs.values():
+            d = [sum((a - b) * (a - b) for a, b in zip(v, c)) for c in cents]
+            best = d.index(min(d))
+            counts[best] += 1
+            sums[best] = [s + x for s, x in zip(sums[best], v)]
+        empty += counts.count(0)
+        cents = [
+            [s // n for s in sm] if n else c
+            for c, sm, n in zip(cents, sums, counts)
+        ]
+    return cents, empty
+
+
+def test_lloyd_engine_matches_python_reference(spark):
+    """The one Lloyd's engine against an independent model: plain
+    k-means (``train_kmeans_fixed``) and the m=2 product quantizer
+    (``train_pq_codebooks``, subspace ``s`` seeded ``pq{s}``) equal
+    :func:`_lloyd_reference` on the planted blobs.  Blob points repeat
+    every 11 ids, so at large k some clusters empty out and the
+    keep-the-centroid rule is exercised (asserted, so the fixture
+    cannot drift away from it)."""
+    from gdp_etl_spark.operators.kmeans import (
+        _quantize,
+        train_kmeans_fixed,
+        train_pq_codebooks,
+    )
+
+    df = _planted(spark)
+    q = {
+        r["id"]: list(r["q"])
+        for r in df.select(
+            "id", _quantize(F.col("vec"), 1e6, 1.0).alias("q")
+        ).collect()
+    }
+    n_empty = 0
+    for k in (3, 20):
+        want, empty = _lloyd_reference(q, k, 3, "km")
+        n_empty += empty
+        assert train_kmeans_fixed(df, "id", "vec", k=k, n_iter=3) == want
+    assert n_empty > 0, "fixture no longer empties a k-means cluster"
+
+    m, sub = 2, 2
+    ref = [
+        _lloyd_reference(
+            {i: v[s * sub:(s + 1) * sub] for i, v in q.items()},
+            12, 3, f"pq{s}",
+        )
+        for s in range(m)
+    ]
+    assert all(empty > 0 for _, empty in ref), \
+        "fixture no longer empties a cluster in every subspace"
+    got = train_pq_codebooks(
+        df, "id", "vec", m=m, sub=sub, k=12, n_iter=3, seed="pq"
+    )
+    assert got == [books for books, _ in ref]

@@ -117,6 +117,23 @@ def test_cosine_exact_arrow_equals_hof_fold(spark):
             assert math.copysign(1, jvm) == math.copysign(1, arrow) and \
                 jvm == arrow, (i, jvm.hex(), arrow.hex())
 
+    # ±Inf elements score NULL, as the docstring says (the interpreted
+    # fold coerces them instead, so they sit outside the sweep above).
+    # Two infinities wrap the int64 self-norm back to a positive value,
+    # which is how an unmasked Inf once produced a finite garbage score.
+    inf = float("inf")
+    nonfinite = [
+        ([inf, 0.0], [1.0, 0.0]),
+        ([1.0, 0.0], [-inf, 1.0]),
+        ([inf, inf, 1000.0], [1.0, 1.0, 1.0]),
+        ([1.0, 1.0, 1.0], [-inf, -inf, 1000.0]),
+    ]
+    nf = spark.createDataFrame(nonfinite, "a array<float>, b array<float>")
+    scores = nf.select(
+        cosine_exact_arrow(F.col("a"), F.col("b")).alias("c")
+    ).collect()
+    assert [r["c"] for r in scores] == [None] * len(nonfinite)
+
 
 def test_brute_force_topk_ordering(spark):
     out = brute_force_topk(
@@ -1182,9 +1199,11 @@ def test_pq_index_churn_upsert_delete_compact(spark):
     codes table, probe-invariant compaction, and compacted contents ==
     encoding the final logical corpus with the stored codebooks."""
     from gdp_etl_spark.operators.ann_index import (
+        _PQ,
+        _PQ_KEYS,
         _load_codebooks,
         _pq_codes,
-        _read_pq_stamp,
+        _read_stamp,
         append_to_pq_index,
         compact_pq_index,
         delete_from_pq_index,
@@ -1215,7 +1234,7 @@ def test_pq_index_churn_upsert_delete_compact(spark):
         post = sorted(map(tuple, pq_probe_index(spark, q, table,
                                                 k=50).collect()))
         assert pre == post
-        p = _read_pq_stamp(spark, table)
+        p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
         books = _load_codebooks(spark, table, p["m"])
         final = (
             emb.filter(~F.col("vec_id").isin(deleted))

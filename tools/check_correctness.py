@@ -1,15 +1,19 @@
 #!/usr/bin/env python
 """Local mimic of the driver's correctness gate.
 
-Runs every ``__spark_entry__.queries()`` entry at sf0.01 on Spark AND its
-``oracle_sql()`` on DuckDB, then compares:
+Runs every ``__spark_entry__.queries()`` entry at sf0.01 (or on another
+fixture directory) on Spark AND its ``oracle_sql()`` on DuckDB, then
+compares:
 
 * row count,
 * column name set,
 * order-insensitive values (columns sorted by name, rows sorted, doubles
   compared exactly first and with rel-tol 1e-9 as a diagnostic fallback).
 
-Usage: python tools/check_correctness.py [query ...]   (default: all)
+Usage: python tools/check_correctness.py [--sf-dir DIR] [query ...]
+
+``--sf-dir`` names the testdata directory (default: the sf0.01 fixtures);
+with no query names, every registered query runs.
 """
 
 from __future__ import annotations
@@ -162,13 +166,18 @@ def main():
     from gdp_etl_spark.schemas import TESTDATA_TABLES
     from gdp_etl_spark.session import get_spark
 
-    only = set(sys.argv[1:])
+    argv = sys.argv[1:]
+    sf_dir = SF_DIR
+    if argv[:1] == ["--sf-dir"]:
+        sf_dir, argv = argv[1], argv[2:]
+    only = set(argv)
+    print(f"fixtures: {sf_dir}")
     qs, oracles = e.queries(), e.oracle_sql()
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
     from gdp_etl_spark.plans.golden import reference_available
@@ -187,7 +196,7 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             spark_cols = sdf.columns
             spark_rows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:
