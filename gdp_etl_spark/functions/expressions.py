@@ -156,7 +156,13 @@ def bigint_array_lit(values: Sequence[int]) -> Column:
     BIGINT (the old per-element form coerced mixed int/long arrays to
     the widest type anyway, and every consumer compares or folds
     against bigint columns)."""
-    return F.expr(f"array({_bigint_elems(values)})")
+    return F.expr(bigint_array_sql(values))
+
+
+def bigint_array_sql(values: Sequence[int]) -> str:
+    """The SQL text of :func:`bigint_array_lit`, for embedding in a
+    larger expression that is parsed once."""
+    return f"array({_bigint_elems(values)})"
 
 
 def _bigint_elems(values: Sequence[int]) -> str:
@@ -179,10 +185,11 @@ def bigint_matrix_lit(rows: Sequence[Sequence[int]]) -> Column:
     """``array<array<bigint>>`` literal in one parse call — the
     nested-matrix form of :func:`bigint_array_lit` (literal k-means
     centroids, PQ codebooks, Rademacher sign matrices)."""
+    return F.expr(bigint_matrix_sql(rows))
+
+
+def bigint_matrix_sql(rows: Sequence[Sequence[int]]) -> str:
+    """The SQL text of :func:`bigint_matrix_lit`."""
     if len(rows) == 0:
         raise ValueError("bigint literal: empty matrix")
-    return F.expr(
-        "array("
-        + ",".join(f"array({_bigint_elems(r)})" for r in rows)
-        + ")"
-    )
+    return f"array({','.join(map(bigint_array_sql, rows))})"

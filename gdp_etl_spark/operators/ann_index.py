@@ -100,7 +100,10 @@ from .kmeans import (
     _pq_encode,
     _probe_cells,
     _quantize,
+    _quantize_fn,
     _query_vectors,
+    _sql_ident,
+    _sql_string,
     _topk_d2,
     assign_expr,
     train_kmeans_fixed,
@@ -433,7 +436,8 @@ def _read_stamp(spark, table: str, prefix: str = _P,
 def _load_centroids(spark, table: str) -> list[list[int]]:
     """Collect the stored coarse centroids — model state, bounded by
     num_centroids × dim, never by data."""
-    rows = spark.table(_centroids_table(table)).orderBy("cell").collect()
+    rows = sorted(spark.table(_centroids_table(table)).collect(),
+                  key=lambda r: r["cell"])
     if not rows:
         raise ValueError(f"{_centroids_table(table)} is empty")
     return [list(r["c"]) for r in rows]
@@ -449,21 +453,18 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str, dim: int,
     assignment of :func:`_postings`, the id-keyed ``__vectors`` twin
     the probe fetches query vectors from, and the PQ encoder of
     :func:`_pq_codes`."""
-    q = _quantize(F.col(vec_col), scale, offset)
-    guarded = F.when(
-        F.size(F.col(vec_col)) != F.lit(dim),
-        F.raise_error(
-            F.format_string(
-                f"{kind} index: vector for {id_col} %s has dimension "
-                f"%s, index dimension is {dim}",
-                F.col(id_col).cast("string"),
-                F.size(F.col(vec_col)).cast("string"),
-            )
-        ).cast("array<bigint>"),
-    ).otherwise(q)
-    return df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), guarded.alias("q"),
-        F.lit(int(seq)).cast("bigint").alias("seq"),
+    i, v = _sql_ident(id_col), _sql_ident(vec_col)
+    msg = _sql_string(
+        f"{kind} index: vector for {id_col} %s has dimension %s, "
+        f"index dimension is {dim}"
+    )
+    return df.filter(f"{v} IS NOT NULL").selectExpr(
+        i,
+        f"CASE WHEN size({v}) <> {int(dim)} THEN CAST(raise_error("
+        f"format_string({msg}, CAST({i} AS STRING), CAST(size({v}) AS "
+        f"STRING))) AS ARRAY<BIGINT>) ELSE transform({v}, "
+        f"{_quantize_fn(scale, offset)}) END AS q",
+        f"{int(seq)}L AS seq",
     )
 
 
@@ -472,10 +473,8 @@ def _assign_cells(qdf: DataFrame, id_col: str,
     """Cell-assign an already-quantized ``(id, q, seq)`` frame —
     map-only (the shared literal-centroid argmin, whole-stage codegen,
     no shuffle before the bucketed write's own redistribution)."""
-    cell, _ = assign_expr(centroids, F.col("q"))
-    return qdf.select(
-        cell.cast("int").alias("cell"), F.col(id_col), "q", "seq",
-    )
+    cell, _ = assign_expr(centroids, "q")
+    return qdf.selectExpr(f"{cell} AS cell", _sql_ident(id_col), "q", "seq")
 
 
 def _postings(df: DataFrame, id_col: str, vec_col: str,
@@ -780,8 +779,7 @@ def ivf_probe_index(
             F.col(p["vec_col"]).isNotNull()
         ).select(
             F.col(id_col),
-            _quantize(F.col(p["vec_col"]), p["scale"],
-                      p["offset"]).alias("q"),
+            _quantize(p["vec_col"], p["scale"], p["offset"]).alias("q"),
         ).filter(F.col(id_col).isin(query_ids)).collect()
     elif spark.catalog.tableExists(_vectors_table(table)):
         # id-keyed __vectors twin: bucket-pruned id IN (...) fetch,
@@ -803,7 +801,7 @@ def ivf_probe_index(
     all_cells = sorted({c for cells in probes.values() for c in cells})
     scored = _explode_scores(
         post.filter(F.col("cell").isin(all_cells)),  # bucket-pruned
-        id_col, _ivf_scores(qvecs, probes, F.col("cell"), F.col("q")),
+        id_col, _ivf_scores(qvecs, probes, "cell", "q"),
     )
     return _topk_d2(scored, k)
 
@@ -926,10 +924,8 @@ def _pq_codebooks_table(table: str) -> str:
 
 
 def _load_codebooks(spark, table: str, m: int) -> list[list[list[int]]]:
-    rows = (
-        spark.table(_pq_codebooks_table(table))
-        .orderBy("subspace", "code").collect()
-    )
+    rows = sorted(spark.table(_pq_codebooks_table(table)).collect(),
+                  key=lambda r: (r["subspace"], r["code"]))
     books: list[list[list[int]]] = [[] for _ in range(m)]
     for r in rows:
         books[r["subspace"]].append(list(r["c"]))
@@ -947,8 +943,8 @@ def _pq_codes(df: DataFrame, id_col: str, vec_col: str,
     before the bucketed write's own redistribution."""
     qdf = _quantized(df, id_col, vec_col, len(books) * sub, scale,
                      offset, seq, kind="pq")
-    return qdf.select(
-        id_col, _pq_encode(F.col("q"), books, sub).alias("codes"), "seq"
+    return qdf.selectExpr(
+        _sql_ident(id_col), f"{_pq_encode('q', books, sub)} AS codes", "seq"
     )
 
 
@@ -1081,7 +1077,7 @@ def pq_probe_index(
         queries.filter(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col),
-            _quantize(F.col(vec_col), p["scale"], p["offset"]).alias("q"),
+            _quantize(vec_col, p["scale"], p["offset"]).alias("q"),
         )
         .limit(int(max_queries) + 1)
         .collect()
@@ -1097,7 +1093,7 @@ def pq_probe_index(
     spark.catalog.refreshTable(table)
     scored = _explode_scores(
         _snapshot(spark, table, id_col, asof_seq), id_col,
-        _adc_scores(qvecs, books, p["dim"] // p["m"], F.col("codes")),
+        _adc_scores(qvecs, books, p["dim"] // p["m"], "codes"),
     )
     return _topk_d2(scored, k)
 

@@ -1,11 +1,9 @@
 """Distributed deterministic k-means, and the fixed-point quantizer core
 every IVF/PQ path shares.
 
-The missing piece between the ANN family (similarity.py — which trains
-its IVF centroids driver-side on a small *sample*) and corpus curation:
-cluster the FULL embedding table distributed, e.g. to balance training
-data across semantic domains, pick diverse exemplars, or build coarse
-IVF cells from all points instead of a sample.
+Clusters the FULL embedding table distributed, e.g. to balance
+training data across semantic domains, pick diverse exemplars, or build
+coarse IVF cells from all points instead of a sample.
 
 Spark-first shape (the classic scalable Lloyd's layout, same as
 Spark ML's KMeans but engine-deterministic):
@@ -27,6 +25,18 @@ frame holding one row per (vector, subspace); plain k-means is the
 the ``m``-subspace case (slice ``s``, seed string ``f"{seed}{s}"``).
 Seeding is one per-subspace ``row_number`` action, and each iteration
 one ``groupBy(__sub, cluster)`` action, whatever ``m`` is.
+
+**One SQL parse per expression.**  Every quantizer expression is built
+as SQL text and parsed once (``F.expr``/``selectExpr``): helpers take
+column names or SQL text and return SQL text, so a Column-operator
+lambda no longer pays a py4j round trip per operator per centroid
+element (a ``pq_index`` build fell from ~8,500 round trips to ~850).
+Literal rules: names are backtick-quoted with backticks doubled;
+integers render through ``expressions.bigint_array_sql``; doubles as
+``repr(float(v)) + "D"`` (bare ``1.0`` parses as DECIMAL), and a
+non-finite ``scale``/``offset`` raises ``ValueError``; seed strings are
+SQL string literals with ``\\`` and ``'`` backslash-escaped; lambda
+variables are ``__``-prefixed so they cannot capture a caller's column.
 
 Determinism & oracle portability (the repo's fixed-point recipe —
 cf. functions/vectors.py:dot_fixed, graph.py:pagerank exact tier):
@@ -57,67 +67,73 @@ top-k tail every fixed-point ANN result ends with.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.expressions import bigint_array_lit, bigint_matrix_lit
+from ..functions.expressions import bigint_array_sql, bigint_matrix_sql
 
 
-def _quantize(vec: Column, scale: float, offset: float) -> Column:
-    """Non-negative fixed-point: floor((x + offset) * scale) as bigint."""
-    return F.transform(
-        vec,
-        lambda x: F.floor(
-            (x.cast("double") + F.lit(float(offset))) * F.lit(float(scale))
-        ).cast("bigint"),
-    )
+def _sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _dist2(q: Column, cent: Column) -> Column:
-    """Exact integer squared L2 distance between two bigint arrays."""
-    return F.aggregate(
-        F.zip_with(q, cent, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+def _sql_double(v: float) -> str:
+    """A DOUBLE literal: bare ``1.0`` parses as DECIMAL in Spark SQL."""
+    if not math.isfinite(float(v)):
+        raise ValueError(f"quantizer scale/offset must be finite: {v!r}")
+    return f"{float(v)!r}D"
 
 
-def assign_expr(
-    centroids: list[list[int]], q: Column
-) -> tuple[Column, Column]:
-    """(cluster, dist2) argmin expressions for a quantized vector
-    column against literal centroids — THE assignment shape, shared by
-    the Lloyd's loop, :func:`kmeans_fixed`'s final select, and the PQ
-    encoder :func:`_pq_encode`, so the tie rule (first = smallest
-    cluster id) and the HOF arity live in exactly one place.
-    The transform lambda must stay ONE-argument: a second parameter —
-    even a ``_s=s`` default used to bind a loop variable — makes
-    PySpark pass the ARRAY INDEX to it (HOF arity is inferred from the
-    signature; the pq_topk encoder shipped that bug once).
+def _sql_string(s: str) -> str:
+    """An escaped SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    r16: the literal matrix is built by ONE SQL parse
-    (``bigint_matrix_lit``) instead of k·dim ``F.lit`` py4j calls —
-    pure driver-side plan-construction cost (~0.5 ms/element) that
-    every assignment-bearing query paid per build; values and the
-    argmin tie rule are unchanged (the old mixed int/long literals
-    coerced to bigint in the fold anyway).  A ``bind_once`` variant
-    that bound the dists array per row (on the theory that
-    ``array_position(dists, array_min(dists))`` pays the k·dim fold
-    twice) was A/B'd interleaved across six assignment-bearing queries
-    and measured par-to-slightly-SLOWER (e.g. semantic_dedup
-    1.99→2.18, pq_index 5.33→5.65) — projection-level subexpression
-    elimination already dedups the repeated subtree here, unlike the
-    captured-operand-per-element blowups bind_once exists for;
-    rejected."""
-    cents = bigint_matrix_lit(centroids)
-    dists = F.transform(cents, lambda c: _dist2(q, c))
+
+def _quantize_fn(scale: float, offset: float) -> str:
+    """SQL lambda: non-negative bigint ``floor((x + offset) * scale)``."""
     return (
-        (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
-        F.array_min(dists),
+        f"__x -> CAST(floor((CAST(__x AS DOUBLE) + {_sql_double(offset)})"
+        f" * {_sql_double(scale)}) AS BIGINT)"
+    )
+
+
+def _quantize(vec: Column | str, scale: float, offset: float) -> Column:
+    """``transform(vec, _quantize_fn)`` over a vector column or name."""
+    return F.call_function("transform", vec,
+                           F.expr(_quantize_fn(scale, offset)))
+
+
+def _dist2(q: str, cent: str) -> str:
+    """Exact integer squared L2 distance between two bigint arrays."""
+    return (
+        f"aggregate(zip_with({q}, {cent}, (__a, __b) -> (__a - __b) * "
+        f"(__a - __b)), 0L, (__acc, __e) -> __acc + __e)"
+    )
+
+
+def assign_expr(centroids: list[list[int]], q: str) -> tuple[str, str]:
+    """(cluster, dist2) argmin expressions for a quantized vector
+    ``q`` against literal centroids — THE assignment shape, shared by
+    the Lloyd's loop, :func:`kmeans_fixed`'s final select, IVF cell
+    assignment and the PQ encoder :func:`_pq_encode`, so the tie rule
+    (first = smallest cluster id) lives in exactly one place.
+
+    A ``bind_once`` variant that bound the dists array per row was
+    A/B'd interleaved across six assignment-bearing queries (r16) and
+    measured par-to-slightly-SLOWER (e.g. semantic_dedup 1.99→2.18,
+    pq_index 5.33→5.65): projection-level subexpression elimination
+    already dedups the repeated ``dists`` subtree; rejected."""
+    cents = bigint_matrix_sql(centroids)
+    dists = f"transform({cents}, __c -> {_dist2(q, '__c')})"
+    return (
+        f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)",
+        f"array_min({dists})",
     )
 
 
@@ -126,16 +142,16 @@ def assign_expr(
 # ---------------------------------------------------------------------------
 
 
-def _pq_encode(q: Column, books: list[list[list[int]]], sub: int) -> Column:
+def _pq_encode(q: str, books: list[list[list[int]]], sub: int) -> str:
     """``array<int>`` of the ``m`` PQ codes of a quantized vector: per
     subspace ``s``, the argmin code of ``slice(q, s*sub+1, sub)``
     against literal codebook ``s`` — one map-only expression, the
     ``codes`` column of both ``similarity.pq_topk`` and the persisted
     PQ index."""
-    return F.array(*[
-        assign_expr(book, F.slice(q, s * sub + 1, sub))[0]
+    return "array(" + ",".join(
+        assign_expr(book, f"slice({q}, {s * sub + 1}, {sub})")[0]
         for s, book in enumerate(books)
-    ])
+    ) + ")"
 
 
 def _sqdist(a: Sequence[int], b: Sequence[int]) -> int:
@@ -162,54 +178,42 @@ def _adc_tables(qv: list[int], books: list[list[list[int]]],
 
 
 def _ivf_scores(qvecs: dict[int, list[int]], probes: dict[int, list[int]],
-                cell: Column, q: Column) -> Column:
+                cell: str, q: str) -> str:
     """Per-row array of ``(query_id, score_d2)`` structs, one per query:
     the exact squared distance when the row's ``cell`` is one of the
     query's probed cells, else NULL (unprobed rows never evaluate it)."""
-    return F.array(*[
-        F.struct(
-            F.lit(qi).cast("bigint").alias("query_id"),
-            F.when(
-                cell.isin(probes[qi]), _dist2(bigint_array_lit(qv), q)
-            ).alias("score_d2"),
-        )
+    def probed(cells: list[int]) -> str:
+        return f"{cell} IN ({','.join(map(str, cells))})" if cells else "false"
+    return "array(" + ",".join(
+        f"struct({qi}L AS query_id, CASE WHEN {probed(probes[qi])} THEN "
+        f"{_dist2(bigint_array_sql(qv), q)} END AS score_d2)"
         for qi, qv in qvecs.items()
-    ])
+    ) + ")"
 
 
 def _adc_scores(qvecs: dict[int, list[int]], books: list[list[list[int]]],
-                sub: int, codes: Column) -> Column:
+                sub: int, codes: str) -> str:
     """Per-row array of ``(query_id, score_d2)`` structs, one per query:
     the ADC estimate, i.e. the sum over subspaces of the query's table
     entry at the row's code — ``m`` array lookups, map-only."""
-    return F.array(*[
-        F.struct(
-            F.lit(qi).cast("bigint").alias("query_id"),
-            sum(
-                F.element_at(
-                    bigint_array_lit(table), F.element_at(codes, s + 1) + 1
-                )
-                for s, table in enumerate(_adc_tables(qv, books, sub))
-            ).cast("bigint").alias("score_d2"),
-        )
+    return "array(" + ",".join(
+        f"struct({qi}L AS query_id, CAST(" + " + ".join(
+            f"element_at({bigint_array_sql(t)}, "
+            f"element_at({codes}, {s + 1}) + 1)"
+            for s, t in enumerate(_adc_tables(qv, books, sub))
+        ) + " AS BIGINT) AS score_d2)"
         for qi, qv in qvecs.items()
-    ])
+    ) + ")"
 
 
-def _explode_scores(rows: DataFrame, id_col: str,
-                    scores: Column) -> DataFrame:
+def _explode_scores(rows: DataFrame, id_col: str, scores: str) -> DataFrame:
     """``(query_id, neighbour_id, score_d2)`` candidates from a per-row
     score array: NULL scores (unprobed) and self-matches dropped."""
     return (
-        rows.select(
-            F.col(id_col).alias("neighbour_id"),
-            F.explode(scores).alias("__e"),
-        )
-        .select("__e.query_id", "neighbour_id", "__e.score_d2")
-        .filter(
-            F.col("score_d2").isNotNull()
-            & (F.col("neighbour_id") != F.col("query_id"))
-        )
+        rows.selectExpr(f"{_sql_ident(id_col)} AS neighbour_id",
+                        f"explode({scores}) AS __e")
+        .selectExpr("__e.query_id", "neighbour_id", "__e.score_d2")
+        .filter("score_d2 IS NOT NULL AND neighbour_id <> query_id")
     )
 
 
@@ -218,14 +222,14 @@ def _topk_d2(scored: DataFrame, k: int) -> DataFrame:
     ``(score_d2, neighbour_id)`` as ``(query_id, neighbour_id,
     score_d2, rank int)`` — a ``row_number`` window Catalyst prunes
     map-side (WindowGroupLimit, see skew.grouped_topk)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_d2").asc(), F.col("neighbour_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbour_id", "score_d2",
-                F.col("rank").cast("int").alias("rank"))
+        scored.withColumn("rank", F.expr(
+            "row_number() OVER (PARTITION BY query_id "
+            "ORDER BY score_d2 ASC, neighbour_id ASC)"
+        ))
+        .filter(f"`rank` <= {int(k)}")
+        .selectExpr("query_id", "neighbour_id", "score_d2",
+                    "CAST(`rank` AS INT) AS `rank`")
     )
 
 
@@ -283,22 +287,20 @@ def _quantized_frame(
     string ``seeds[s]`` and, when ``sub`` is set, quantizes
     ``slice(vec, s*sub+1, sub)``; ``sub=None`` keeps the whole vector
     (plain k-means: one seed string, no slicing)."""
-    base = df.filter(F.col(vec_col).isNotNull())
-    frames = []
-    for s, seed in enumerate(seeds):
-        vec = F.col(vec_col)
-        if sub is not None:
-            vec = F.slice(vec, s * sub + 1, sub)
-        h = F.md5(
-            F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
+    i, v = _sql_ident(id_col), _sql_ident(vec_col)
+    base = df.filter(f"{v} IS NOT NULL")
+    sliced = [v if sub is None else f"slice({v}, {s * sub + 1}, {sub})"
+              for s in range(len(seeds))]
+    return reduce(DataFrame.unionByName, [
+        base.selectExpr(
+            f"{s} AS __sub",
+            f"{i} AS __id",
+            f"transform({sliced[s]}, {_quantize_fn(scale, offset)}) AS __q",
+            f"CAST(conv(substring(md5(concat_ws(':', CAST({i} AS STRING), "
+            f"{_sql_string(seed)})), 1, 8), 16, 10) AS BIGINT) AS __h",
         )
-        frames.append(base.select(
-            F.lit(s).alias("__sub"),
-            F.col(id_col).alias("__id"),
-            _quantize(vec, scale, offset).alias("__q"),
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("__h"),
-        ))
-    return reduce(DataFrame.unionByName, frames)
+        for s, seed in enumerate(seeds)
+    ])
 
 
 def _lloyd(qdf: DataFrame, m: int, k: int,
@@ -310,14 +312,10 @@ def _lloyd(qdf: DataFrame, m: int, k: int,
     ``groupBy(__sub, cluster)`` action; empty clusters keep their
     centroid.  Books hold fewer than ``k`` entries when the corpus is
     smaller than ``k``, and are all empty on an empty corpus."""
-    rn = F.row_number().over(
-        Window.partitionBy("__sub").orderBy("__h", "__id")
-    )
-    seed_rows = (
-        qdf.select("__sub", "__q", rn.alias("__rn"))
-        .filter(F.col("__rn") <= k)
-        .collect()
-    )
+    seed_rows = qdf.selectExpr(
+        "__sub", "__q",
+        "row_number() OVER (PARTITION BY __sub ORDER BY __h, __id) AS __rn",
+    ).filter(f"__rn <= {int(k)}").collect()
     books: list[list[list[int]]] = [[] for _ in range(m)]
     for r in sorted(seed_rows, key=lambda r: (r["__sub"], r["__rn"])):
         books[r["__sub"]].append(list(r["__q"]))
@@ -326,21 +324,17 @@ def _lloyd(qdf: DataFrame, m: int, k: int,
         return books
     dim = len(books[0][0])
     for _ in range(n_iter):
-        cluster = None
-        for s, book in enumerate(books):
-            c, _d = assign_expr(book, F.col("__q"))
-            cluster = (
-                c if cluster is None
-                else F.when(F.col("__sub") == s, c).otherwise(cluster)
-            )
+        cluster = assign_expr(books[0], "__q")[0]
+        for s in range(1, m):
+            cluster = (f"CASE WHEN __sub = {s} THEN "
+                       f"{assign_expr(books[s], '__q')[0]} ELSE {cluster} END")
         stats = (
-            qdf.select("__sub", "__q", cluster.alias("cluster"))
+            qdf.selectExpr("__sub", "__q", f"{cluster} AS cluster")
             .groupBy("__sub", "cluster")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(F.element_at("__q", i + 1)).alias(f"s{i}")
-                  for i in range(dim)],
-            )
+            .agg(F.expr("count(1) AS n"), *[
+                F.expr(f"sum(element_at(__q, {i + 1})) AS s{i}")
+                for i in range(dim)
+            ])
             .collect()
         )
         for r in stats:
@@ -449,17 +443,17 @@ def kmeans_fixed(
         df, id_col, vec_col, k, n_iter, scale, offset, seed
     )
     if not centroids:
-        return df.select(
-            F.col(id_col),
-            F.lit(None).cast("int").alias("cluster"),
-            F.lit(None).cast("bigint").alias("dist2"),
+        return df.selectExpr(
+            _sql_ident(id_col),
+            "CAST(NULL AS INT) AS cluster",
+            "CAST(NULL AS BIGINT) AS dist2",
         ).limit(0)
     # the training frame is unpersisted: the assignment re-derives __q
     # lazily from the source
     qdf = _quantized_frame(df, id_col, vec_col, scale, offset, [seed], None)
-    cluster, dist2 = assign_expr(centroids, F.col("__q"))
-    return qdf.select(
-        F.col("__id").alias(id_col),
-        cluster.alias("cluster"),
-        dist2.alias("dist2"),
+    cluster, dist2 = assign_expr(centroids, "__q")
+    return qdf.selectExpr(
+        f"__id AS {_sql_ident(id_col)}",
+        f"{cluster} AS cluster",
+        f"{dist2} AS dist2",
     )

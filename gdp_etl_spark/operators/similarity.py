@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.expressions import bigint_array_lit, bigint_matrix_lit
+from ..functions.expressions import bigint_array_sql, bigint_matrix_lit
 from ..functions.vectors import cosine_exact_arrow
 
 
@@ -485,6 +485,7 @@ def ivf_topk_fixed(
         _probe_cells,
         _quantize,
         _query_vectors,
+        _sql_ident,
         _topk_d2,
         assign_expr,
         train_kmeans_fixed,
@@ -524,19 +525,20 @@ def ivf_topk_fixed(
         )
 
     quantized = base.select(
-        F.col(id_col), _quantize(F.col(vec_col), scale, offset).alias("q")
+        id_col, _quantize(vec_col, scale, offset).alias("q")
     )
-    cell, _ = assign_expr(centroids, F.col("q"))
+    cell, _ = assign_expr(centroids, "q")
     qvecs = _query_vectors(
         quantized.filter(F.col(id_col).isin(query_ids)).collect(),
         query_ids, id_col, "corpus",
     )
     probes = {qi: _probe_cells(qv, centroids, nprobe)
               for qi, qv in qvecs.items()}
-    assigned = quantized.select(id_col, "q", cell.alias("cell"))
+    assigned = quantized.selectExpr(
+        _sql_ident(id_col), "q", f"{cell} AS cell"
+    )
     scored = _explode_scores(
-        assigned, id_col,
-        _ivf_scores(qvecs, probes, F.col("cell"), F.col("q")),
+        assigned, id_col, _ivf_scores(qvecs, probes, "cell", "q")
     )
     return _topk_d2(scored, k)
 
@@ -581,9 +583,10 @@ def mean_pool_embeddings(
     precision); the Arrow batch keeps keys exact.  Partial sums carry
     across batch boundaries; per-group sums are exact int64 either
     way, so results are bit-identical to the per-group form
-    (associative integer addition).  Ragged, NULL, or NaN/NULL-element
-    vectors raise inside the stream fn: pooling over inconsistent
-    dimensions is a data bug, not a soft case.
+    (associative integer addition).  Ragged or NULL vectors, and
+    NULL, NaN or ±Inf elements, raise inside the stream fn naming the
+    group: pooling them is a data bug, not a soft case.  NaN group keys
+    pool as one group, as ``groupBy`` groups them.
     """
     import numpy as np
     import pyarrow as pa
@@ -609,6 +612,10 @@ def mean_pool_embeddings(
         cur_key, cur_sum, cur_n = None, None, 0
         started = False
         key_type = None
+
+        def same_key(a, b):
+            # NaN keys form one group, as in groupBy
+            return a == b or (a != a and b != b)
 
         def finish(key, q_sum, n):
             centroid = (q_sum.astype(np.float64) / scale) / n
@@ -639,23 +646,26 @@ def mean_pool_embeddings(
             flat = np.asarray(
                 vcol.values.to_numpy(zero_copy_only=False), dtype=np.float64
             )
-            if np.isnan(flat).any():
+            nonfinite = ~np.isfinite(flat)
+            if nonfinite.any():
                 bad = keys[
                     int(
                         np.searchsorted(
-                            offs, np.flatnonzero(np.isnan(flat))[0], "right"
+                            offs, np.flatnonzero(nonfinite)[0], "right"
                         )
                     ) - 1
                 ]
                 raise ValueError(
-                    f"NULL or NaN {vec_col!r} element in group {bad!r}"
+                    f"NULL, NaN or ±Inf {vec_col!r} element in group "
+                    f"{bad!r}"
                 )
             q_flat = np.floor(flat * scale).astype(np.int64)
             n_rows = batch.num_rows
             # segment boundaries: rows are group-contiguous (sorted
             # within the hash partition), so each run is one group
             bounds = [0] + [
-                i for i in range(1, n_rows) if keys[i] != keys[i - 1]
+                i for i in range(1, n_rows)
+                if not same_key(keys[i], keys[i - 1])
             ] + [n_rows]
             out = []
             for b in range(len(bounds) - 1):
@@ -669,7 +679,7 @@ def mean_pool_embeddings(
                     )
                 seg = q_flat[offs[lo]:offs[hi]].reshape(hi - lo, lens[0])
                 s, n = seg.sum(axis=0), hi - lo
-                if started and key == cur_key:
+                if started and same_key(key, cur_key):
                     if len(cur_sum) != len(s):
                         raise ValueError(
                             f"inconsistent {vec_col!r} dimensions in "
@@ -959,6 +969,7 @@ def pq_topk(
         _pq_encode,
         _quantize,
         _query_vectors,
+        _sql_ident,
         _topk_d2,
         train_pq_codebooks,
     )
@@ -978,12 +989,12 @@ def pq_topk(
     )
 
     quantized = base.select(
-        F.col(id_col), _quantize(F.col(vec_col), scale, offset).alias("q")
+        id_col, _quantize(vec_col, scale, offset).alias("q")
     )
     # encode: one map-only pass; the codes array is the persisted PQ
     # index's column shape, so one ADC expression serves both
-    codes = quantized.select(
-        id_col, _pq_encode(F.col("q"), codebooks, sub).alias("codes")
+    codes = quantized.selectExpr(
+        _sql_ident(id_col), f"{_pq_encode('q', codebooks, sub)} AS codes"
     )
     # exact integer ADC tables, driver-side (|Q|·m·k_codes ints)
     qvecs = _query_vectors(
@@ -991,7 +1002,7 @@ def pq_topk(
         query_ids, id_col, "corpus",
     )
     scored = _explode_scores(
-        codes, id_col, _adc_scores(qvecs, codebooks, sub, F.col("codes"))
+        codes, id_col, _adc_scores(qvecs, codebooks, sub, "codes")
     )
     if not rerank:
         return _topk_d2(scored, k)
@@ -1001,19 +1012,19 @@ def pq_topk(
     # |Q|·rerank rows; the exact pass joins it back to the quantized
     # vectors once — still engine-replayable, still hash-exact.
     shortlist = _topk_d2(scored, rerank).select("query_id", "neighbour_id")
-    full = quantized.select(
-        F.col(id_col).alias("neighbour_id"), F.col("q").alias("__qv")
+    full = quantized.selectExpr(
+        f"{_sql_ident(id_col)} AS neighbour_id", "q AS __qv"
     )
     # the shortlist is ≤ |Q|·rerank rows by construction — hint it as
     # the broadcast side so the CORPUS never shuffles for the re-rank
     # (at sf0.01 the planner would happily build the other side)
-    exact = F.broadcast(shortlist).join(full, "neighbour_id").select(
+    exact = F.broadcast(shortlist).join(full, "neighbour_id").selectExpr(
         "query_id", "neighbour_id",
-        F.coalesce(*[
-            F.when(F.col("query_id") == F.lit(qi),
-                   _dist2(bigint_array_lit(qv), F.col("__qv")))
+        "coalesce(" + ",".join(
+            f"CASE WHEN query_id = {qi} THEN "
+            f"{_dist2(bigint_array_sql(qv), '__qv')} END"
             for qi, qv in qvecs.items()
-        ]).alias("score_d2"),
+        ) + ") AS score_d2",
     )
     return _topk_d2(exact, k)
 

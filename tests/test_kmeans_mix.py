@@ -376,3 +376,119 @@ def test_lloyd_engine_matches_python_reference(spark):
         df, "id", "vec", m=m, sub=sub, k=12, n_iter=3, seed="pq"
     )
     assert got == [books for books, _ in ref]
+
+
+def test_quantizer_exprs_build_in_bounded_py4j_round_trips(spark,
+                                                            monkeypatch):
+    """Each quantizer expression is ONE parse of SQL text, so building
+    the assignment (k=16, d=16) and the PQ encoder (m=4) costs a fixed
+    handful of py4j round trips whatever k·d is — a Column-operator
+    lambda pays a py4j call per operator per element (hundreds here).
+    The built columns still score the exact argmin, ties to the
+    smallest cluster id."""
+    from py4j.java_gateway import GatewayClient
+
+    from gdp_etl_spark.operators.kmeans import _pq_encode, _sqdist, assign_expr
+
+    vecs = [[(i * 7 + j * 3) % 11 for j in range(16)] for i in range(6)]
+    df = spark.createDataFrame(list(enumerate(vecs)),
+                               "id long, q array<bigint>")
+
+    def build(k, d, m):
+        cents = [[(c * 5 + j) % 13 for j in range(d)] for c in range(k)]
+        cell, dist2 = assign_expr(cents, "q")
+        sub = d // m
+        books = [[c[s * sub:(s + 1) * sub] for c in cents] for s in range(m)]
+        return df.selectExpr("id", f"{cell} AS cell", f"{dist2} AS d2",
+                             f"{_pq_encode('q', books, sub)} AS codes")
+
+    trips = []
+    orig = GatewayClient.send_command
+
+    def counted(self, command, *args, **kwargs):
+        # "m d": py4j detaching a freed proxy, sent whenever Python's
+        # collector gets to it — not a call the build makes
+        if not command.startswith("m\nd\n"):
+            trips.append(command)
+        return orig(self, command, *args, **kwargs)
+
+    build(2, 4, 4)  # warm py4j's per-name lookups
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    build(2, 4, 4)
+    small = len(trips)
+    trips.clear()
+    big = build(16, 16, 4)
+    n_big = len(trips)
+    monkeypatch.undo()
+    assert n_big == small and n_big <= 30, (small, n_big)
+
+    cents = [[(c * 5 + j) % 13 for j in range(16)] for c in range(16)]
+    for r in big.collect():
+        d = [_sqdist(vecs[r["id"]], c) for c in cents]
+        assert (r["cell"], r["d2"]) == (d.index(min(d)), min(d))
+        sub_d = [[_sqdist(vecs[r["id"]][s * 4:(s + 1) * 4],
+                          c[s * 4:(s + 1) * 4]) for c in cents]
+                 for s in range(4)]
+        assert r["codes"] == [sd.index(min(sd)) for sd in sub_d]
+
+
+def test_seed_hash_escapes_quotes_and_backslashes(spark):
+    """A seed string is one escaped SQL literal: ``'`` and ``\\`` hash
+    exactly as Python's ``md5(f"{id}:{seed}")`` 8-hex prefix."""
+    from gdp_etl_spark.operators.kmeans import _quantized_frame
+
+    df = _planted(spark, n_per=2)
+    for seed in ("it's", "a\\b", "\\'", "'\\n%", "\\"):
+        got = {r["__id"]: r["__h"] for r in _quantized_frame(
+            df, "id", "vec", 1e6, 1.0, [seed], None).collect()}
+        want = {
+            i: int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:8], 16)
+            for i in range(6)
+        }
+        assert got == want, seed
+
+
+def test_caller_column_names_are_not_captured(spark):
+    """Lambda variables are ``__``-prefixed and names backtick-quoted:
+    id/vector columns named ``x``, ``c``, ``acc`` (or holding a backtick
+    and a dot) train the same books as under ordinary names, and an
+    assignment over a quantized column named ``c`` is not shadowed by
+    the centroid variable."""
+    from gdp_etl_spark.operators.kmeans import (
+        _quantize,
+        assign_expr,
+        train_kmeans_fixed,
+        train_pq_codebooks,
+    )
+
+    df = _planted(spark).select("id", "vec")
+    want_pq = train_pq_codebooks(df, "id", "vec", m=2, sub=2, k=3)
+    want_km = train_kmeans_fixed(df, "id", "vec", k=3)
+    for i, v in (("x", "c"), ("c", "acc"), ("acc", "x"), ("i`d", "v.e`c")):
+        renamed = df.toDF(i, v)
+        assert train_pq_codebooks(renamed, i, v, m=2, sub=2, k=3) == want_pq
+        assert train_kmeans_fixed(renamed, i, v, k=3) == want_km
+
+    q = df.select("id", _quantize("vec", 1e6, 1.0).alias("q"))
+    cell = assign_expr(want_km, "q")[0]
+    want = rows(q.selectExpr("id", f"{cell} AS cell"))
+    for name in ("x", "c", "acc", "__q"):
+        cell = assign_expr(want_km, name)[0]
+        assert rows(q.toDF("id", name).selectExpr("id", f"{cell} AS cell")) \
+            == want, name
+
+
+def test_non_finite_scale_or_offset_raises(spark):
+    """``scale``/``offset`` render as DOUBLE literals; a non-finite one
+    would quantize every element to a clamped garbage bigint, so it
+    raises before any job."""
+    from gdp_etl_spark.operators.kmeans import _quantize, train_kmeans_fixed
+
+    df = _planted(spark, n_per=1)
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with pytest.raises(ValueError, match="finite"):
+            train_kmeans_fixed(df, "id", "vec", k=2, scale=bad)
+        with pytest.raises(ValueError, match="finite"):
+            train_kmeans_fixed(df, "id", "vec", k=2, offset=bad)
+        with pytest.raises(ValueError, match="finite"):
+            _quantize("vec", 1e6, bad)

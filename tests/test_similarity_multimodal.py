@@ -433,6 +433,48 @@ class TestMeanPoolEmbeddings:
         with _pytest.raises(Exception, match="NULL"):
             mean_pool_embeddings(df, "label", "embedding").collect()
 
+    def test_infinite_element_raises_naming_group(self, spark):
+        """A ±Inf element would pass a NaN-only mask and cast to a
+        garbage int64 sum (group 1 pooled to [0.75, -4.6e12])."""
+        import pytest as _pytest
+
+        from gdp_etl_spark.operators.similarity import mean_pool_embeddings
+
+        for bad in (float("inf"), float("-inf")):
+            df = spark.createDataFrame(
+                [(1, [1.0, bad]), (1, [0.5, 0.5]), (2, [1.0, 1.0])],
+                "g int, v array<double>",
+            )
+            with _pytest.raises(Exception, match="Inf 'v' element in "
+                                                 "group 1"):
+                mean_pool_embeddings(df, "g", "v").collect()
+
+    def test_nan_keys_pool_as_one_group(self, spark):
+        """NaN group keys are one group, as groupBy counts them — also
+        across an Arrow batch boundary (batches of 2 rows)."""
+        from gdp_etl_spark.operators.similarity import mean_pool_embeddings
+
+        nan = float("nan")
+        df = spark.createDataFrame(
+            [(nan, [1.0]), (nan, [3.0]), (nan, [5.0]), (0.5, [2.0])],
+            "g double, v array<double>",
+        )
+        want = {(r["g"] != r["g"], r["n"]) for r in
+                df.groupBy("g").agg({"*": "count"})
+                .withColumnRenamed("count(1)", "n").collect()}
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+        try:
+            out = mean_pool_embeddings(df, "g", "v").collect()
+        finally:
+            spark.conf.set(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", old
+            )
+        assert {(r["g"] != r["g"], r["n_vecs"]) for r in out} == want
+        assert want == {(True, 3), (False, 1)}
+        (nan_row,) = [r for r in out if r["g"] != r["g"]]
+        assert nan_row["centroid"] == [3.0]
+
 
 class TestEmbeddingGram:
     """Distributed fixed-point covariance: exact integer partials,

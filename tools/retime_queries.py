@@ -6,16 +6,22 @@ named queries, one fresh Spark session, same methodology as bench.py
     python tools/retime_queries.py [--n 4] query [query ...]
 
 Prints one JSON line {"queries": {name: warm_median}, "n": N, "cold":
-{name: first_sample}} for splice/A-B adjudication (the r13/r14 refresh
-protocol).
+{name: first_sample}, "build_py4j": {name: warm_median}} for splice/A-B
+adjudication (the r13/r14 refresh protocol).  ``build_py4j`` counts the
+py4j round trips the query builder makes before the sink runs (DataFrame
+and Column construction plus any eager action), by wrapping py4j's
+``GatewayClient.send_command`` inside this tool.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+
+from py4j.java_gateway import GatewayClient
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,6 +30,14 @@ from gdp_etl_spark.io import DEFAULT_SF_DIR as SF_DIR
 from gdp_etl_spark.session import get_spark
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_ROUND_TRIPS = [0]
+_send_command = GatewayClient.send_command
+
+
+def _counted_send_command(self, *args, **kwargs):
+    _ROUND_TRIPS[0] += 1
+    return _send_command(self, *args, **kwargs)
 
 
 def main() -> None:
@@ -39,22 +53,24 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
-    out, cold = {}, {}
+    GatewayClient.send_command = _counted_send_command
+    out, cold, trips = {}, {}, {}
     for name in names:
         fn = queries[name]
-        samples = []
+        samples, build_trips = [], []
         for i in range(n):
             spark.sparkContext.setJobDescription(f"retime {name} #{i}")
             t0 = time.time()
+            _ROUND_TRIPS[0] = 0
             df = fn(spark, SF_DIR)
+            build_trips.append(_ROUND_TRIPS[0])
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
         cold[name] = round(samples[0], 3)
-        warm = sorted(samples[1:])
-        mid = len(warm) // 2
-        med = warm[mid] if len(warm) % 2 else (warm[mid - 1] + warm[mid]) / 2
-        out[name] = round(med, 3)
+        out[name] = round(statistics.median(samples[1:]), 3)
+        trips[name] = statistics.median(build_trips[1:])
     print(json.dumps({"queries": out, "cold": cold, "n": n,
+                      "build_py4j": trips,
                       "loadavg": os.getloadavg()[0]}))
 
 
