@@ -5,17 +5,19 @@ stamped, bucketed metastore tables.
 quantizer trains IN-QUERY so the result is an engine-replayable
 contract.  Production ANN does not retrain per query — FAISS builds the
 index once and serves many probes from stored state.  This module is
-that shape, applied with the repo's two existing persistence protocols:
+that shape, on the persisted-table store of :mod:`gdp_etl_spark.io`
+(the one the dedup, MinHash and sketch tables use):
 
-* the **dedup index** protocol (``dedup.append_to_dedup_index`` /
-  ``_compact_bucketed_table``): posting lists live in a BUCKETED table
-  keyed by ``cell``, so a probe is a bucket-pruned scan — no index-side
-  Exchange, ever (plan-pinned in pytest);
-* the **sketch table** protocol (``sketches.write_ndv_sketch``):
-  parameters are stamped as table properties, writes go tmp-then-rename
-  so a crash can never leave a live-but-stampless table, and appends
-  derive everything from the stamp so the index space cannot silently
-  fork.
+* posting lists live in a BUCKETED table keyed by ``cell``, so a probe
+  is a bucket-pruned scan — no index-side Exchange, ever (plan-pinned
+  in pytest);
+* parameters are stamped as ``ivf.``/``pq.`` table properties, creates
+  go tmp-then-rename so a crash can never leave a live-but-stampless
+  table, and appends derive everything from the stamp so the index
+  space cannot silently fork.
+
+What stays here is the index's own: the stamp keys and their types,
+the ``seq`` and tombstone logic, and the compaction's churn fold.
 
 Lifecycle:
 
@@ -44,8 +46,8 @@ Lifecycle:
   the per-id max tombstone seq — churn-bounded between compactions, no
   index-side Exchange added.
 * :func:`compact_ivf_index` — fold append-accreted files back to one
-  per bucket (the ``_compact_bucketed_table`` swap, ``ivf.`` stamp
-  carried across), apply the accumulated tombstones physically, and
+  per bucket (the store's compaction swap, ``ivf.`` stamp carried
+  across), apply the accumulated tombstones physically, and
   clear them; probe results are identical before and after (the
   ``ivf_upsert`` driver query pins post-churn probes against a
   from-scratch logical rebuild, cross-engine).
@@ -89,11 +91,19 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import (
+    append_table,
+    compact_table,
+    create_table,
+    read_stamp,
+    restore_swap,
+    write_stamp,
+)
 from ..session import local_df
-from .dedup import _compact_bucketed_table, _num_buckets
 from .kmeans import (
     _adc_scores,
     _check_id_col,
+    _check_nprobe,
     _check_query_ids,
     _explode_scores,
     _ivf_scores,
@@ -164,11 +174,8 @@ def _bump_next_seq(spark, table: str, prefix: str, expected: int) -> None:
     seq and the caller must inspect or re-run under the single-writer
     contract the module docstring states."""
     key = f"{prefix}next_seq"
-    rows = spark.sql(
-        f"SHOW TBLPROPERTIES {table} ('{key}')"
-    ).collect()
-    current = int(rows[0]["value"]) if rows and not str(
-        rows[0]["value"]).startswith("Table") else None
+    current = read_stamp(spark, table, key).get(key)
+    current = None if current is None else int(current)
     if current != int(expected):
         raise RuntimeError(
             f"{table}: stamped {key} is {current}, expected "
@@ -178,10 +185,7 @@ def _bump_next_seq(spark, table: str, prefix: str, expected: int) -> None:
             f"is ambiguous: inspect the __tombstones companion or "
             f"re-run the batch alone"
         )
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('{key}' = '{int(expected) + 1}')"
-    )
+    write_stamp(spark, table, {key: int(expected) + 1})
 
 
 def _append_tombstones(
@@ -404,25 +408,12 @@ def pq_index_stats(spark, table: str) -> DataFrame:
     return _index_stats(spark, table, p["id_col"], p["next_seq"])
 
 
-def _stamp(spark, table: str, prefix: str, params: dict) -> None:
-    """Quote-escaped property stamp (the _compact_bucketed_table rule:
-    a hostile value is a stored string, not a syntax error)."""
-    kv = ", ".join(
-        "'{}{}' = '{}'".format(prefix, k, str(v).replace("'", "''"))
-        for k, v in sorted(params.items())
-    )
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
-
-
 def _read_stamp(spark, table: str, prefix: str = _P,
                 keys: dict = _KEYS) -> dict:
     """The index parameters stamped under ``prefix``, typed by the
     ``keys`` spec; raises when any is missing (not an index table of
     that kind, or one written before a format bump)."""
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
+    props = read_stamp(spark, table, prefix)
     missing = [prefix + k for k in keys if prefix + k not in props]
     if missing:
         kind = prefix.rstrip(".")
@@ -489,18 +480,6 @@ def _postings(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def _save_bucketed(df: DataFrame, table: str, key: str, num_buckets: int,
-                   mode: str) -> None:
-    """Write ``df`` as a parquet table bucketed and sorted by ``key``."""
-    (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(num_buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
-
-
 def write_ivf_index(
     df: DataFrame,
     table: str,
@@ -519,10 +498,11 @@ def write_ivf_index(
     centroids in ``<table>__centroids`` and the quantized corpus as
     cell-bucketed posting lists in ``table``.
 
-    Durability (the write_ndv_sketch rule): both tables are written and
-    stamped under tmp names, then renamed into place — centroids first,
-    postings last, so the index is live only when complete (the
-    POSTINGS table, renamed last, is the liveness marker).  A crash
+    Durability (the store's :func:`gdp_etl_spark.io.create_table`):
+    each table is written under a tmp name (the postings stamped
+    there), then renamed into place — centroids first, postings last,
+    so the index is live only when complete (the POSTINGS table,
+    renamed last, is the liveness marker).  A crash
     between the two renames leaves an orphaned companion with no
     postings table; a retry detects that state (companion present,
     postings absent) and reclaims the orphan instead of failing with
@@ -549,19 +529,14 @@ def write_ivf_index(
         "seed": seed, "id_col": id_col, "vec_col": vec_col,
         "next_seq": 1,
     }
-    ctmp, vtmp, ptmp = f"{ctable}__new", f"{vtable}__new", f"{table}__new"
-    spark.sql(f"DROP TABLE IF EXISTS {ctmp}")
-    spark.sql(f"DROP TABLE IF EXISTS {vtmp}")
-    spark.sql(f"DROP TABLE IF EXISTS {ptmp}")
     # centroids are model state (k rows): local_df ships ONE Arrow
     # batch as a LocalRelation (~0.05 s) instead of pickling rows
     # through executor Python workers (~0.5 s warm, 3 s cold — the
     # session.local_df rationale, measured r15)
-    local_df(
+    create_table(local_df(
         spark, [(i, c) for i, c in enumerate(centroids)],
         "cell int, c array<bigint>",
-    ).write.mode("overwrite").saveAsTable(ctmp)
-    spark.sql(f"ALTER TABLE {ctmp} RENAME TO {ctable}")
+    ), ctable)
     dim = len(centroids[0])
     # id-keyed __vectors twin: the store probes fetch query vectors
     # from with BUCKET PRUNING (id IN (...) on the bucket key) — the
@@ -573,34 +548,27 @@ def write_ivf_index(
     # columnar re-scans at bench scale, and at 100 TB it would write
     # corpus bytes to the cache tier to save two pruned parquet scans
     # — the guide's cache-only-when-recompute-is-costlier rule).
-    _save_bucketed(
+    create_table(
         _quantized(df, id_col, vec_col, dim, scale, offset, seq=0),
-        vtmp, id_col, num_buckets, "overwrite",
+        vtable, [id_col], num_buckets, [id_col],
     )
-    spark.sql(f"ALTER TABLE {vtmp} RENAME TO {vtable}")
-    _save_bucketed(
+    create_table(
         _postings(df, id_col, vec_col, centroids, scale, offset, seq=0),
-        ptmp, "cell", num_buckets, "overwrite",
+        table, ["cell"], num_buckets, ["cell"],
+        stamp={_P + k: v for k, v in params.items()},
     )
-    _stamp(spark, ptmp, _P, params)
-    spark.sql(f"ALTER TABLE {ptmp} RENAME TO {table}")
 
 
-def _append_twin(qdf: DataFrame, table: str, p: dict) -> None:
+def _append_twin(qdf: DataFrame, table: str) -> None:
     """Mirror an already-quantized write batch into the id-keyed
     ``__vectors`` twin — the same ``(id, q, seq)`` frame the caller's
     posting append reads (quantized once, shared) — bucketed by id so
     probe-time query-vector fetches are bucket-pruned.  A pre-twin
     index (format note in the module docstring) skips silently: the
     probe falls back to the documented posting scan."""
-    spark = qdf.sparkSession
     vtable = _vectors_table(table)
-    if not spark.catalog.tableExists(vtable):
-        return
-    _save_bucketed(
-        qdf, vtable, p["id_col"], _num_buckets(spark, vtable), "append"
-    )
-    spark.catalog.refreshTable(vtable)
+    if qdf.sparkSession.catalog.tableExists(vtable):
+        append_table(qdf, vtable)
 
 
 def _append_ivf(df: DataFrame, table: str, p: dict,
@@ -613,15 +581,9 @@ def _append_ivf(df: DataFrame, table: str, p: dict,
         df, p["id_col"], p["vec_col"], len(centroids[0]),
         p["scale"], p["offset"], seq=p["next_seq"],
     )
-    _save_bucketed(
-        _assign_cells(qdf, p["id_col"], centroids),
-        table, "cell", _num_buckets(spark, table), "append",
-    )
-    _append_twin(qdf, table, p)
+    append_table(_assign_cells(qdf, p["id_col"], centroids), table)
+    _append_twin(qdf, table)
     _bump_next_seq(spark, table, _P, p["next_seq"])
-    # the append_to_dedup_index catalog-cache rule: invalidate the
-    # cached file listing so a probe in this session sees the new rows
-    spark.catalog.refreshTable(table)
 
 
 def append_to_ivf_index(df: DataFrame, table: str) -> None:
@@ -762,6 +724,7 @@ def ivf_probe_index(
     ``_snapshot``).  Run compaction only once no consumer needs
     asof reads below the applied tombstones."""
     query_ids = _check_query_ids(query_ids, "ivf_probe_index")
+    _check_nprobe(nprobe, "ivf_probe_index")
     if len(query_ids) > max_queries:
         raise ValueError(
             f"ivf_probe_index: {len(query_ids)} query ids, over "
@@ -806,22 +769,21 @@ def ivf_probe_index(
     return _topk_d2(scored, k)
 
 
-def _churn_fold(tomb: DataFrame | None, id_col: str,
-                content_cols: list[str]):
-    """Compaction transform for a churned index table: tombstone
+def _churn_fold(tomb: DataFrame | None, id_col: str):
+    """Compaction fold for a churned index table: tombstone
     resolution, then REDELIVERY dedup — physically identical rows that
     landed at different seqs (a retried append after a lost ack: the
     bump succeeded, the caller saw a failure and re-ran) collapse to
-    the max seq (r14 advisor finding: the plain ``.distinct()`` of the
-    shared swap no longer collapses them once rows carry a seq, and no
-    tombstone ever kills the twin — both would stay live forever and
-    consume top-k slots).  Grouping on the content columns restores
-    the pre-seq 'distinct full rows' guarantee; keeping the MAX seq
-    preserves liveness (the surviving row still outlives every folded
-    tombstone of its id)."""
+    the max seq (r14 advisor finding: a plain ``distinct`` no longer
+    collapses them once rows carry a seq, and no tombstone ever kills
+    the twin — both would stay live forever and consume top-k slots).
+    Grouping on the content columns (every column but ``seq``)
+    restores the pre-seq 'distinct full rows' guarantee; keeping the
+    MAX seq preserves liveness (the surviving row still outlives every
+    folded tombstone of its id)."""
     def fold(df: DataFrame) -> DataFrame:
-        live = _resolve_live(df, tomb, id_col)
-        return live.groupBy(*content_cols).agg(
+        content = [c for c in df.columns if c != "seq"]
+        return _resolve_live(df, tomb, id_col).groupBy(*content).agg(
             F.max("seq").alias("seq")
         )
     return fold
@@ -835,33 +797,25 @@ def _retire_tombstones(spark, table: str, cutoff: int) -> None:
     into the rewrite was written at ``seq < cutoff`` (the stamp
     captured on compaction entry), so only rows at ``seq >= cutoff``
     — appended by a mutator RACING the compaction — survive the
-    clear, preserved into a rewritten companion.  Their presence then
+    clear, kept by the store's compaction swap (the live companion
+    stays until the filtered copy is in place).  Their presence then
     raises (quiet-window enforcement): the racing batch's DATA rows
     may or may not have been captured by the rewrite, so its ids are
     prefer-missing — re-run that mutation batch.  Deletes stay safe
     either way: a preserved tombstone that WAS already folded
     re-applies as a no-op (surviving rows have seq >= it)."""
     ttable = _tombstones_table(table)
-    if not spark.catalog.tableExists(ttable):
+    if not restore_swap(spark, ttable):
         return
     spark.catalog.refreshTable(ttable)
-    schema = spark.table(ttable).schema
-    leftover = spark.table(ttable).filter(
-        F.col("seq") >= F.lit(int(cutoff))
-    ).collect()
-    if not leftover:
+    racing = F.col("seq") >= F.lit(int(cutoff))
+    n_left = spark.table(ttable).filter(racing).count()
+    if not n_left:
         spark.sql(f"DROP TABLE IF EXISTS {ttable}")
         return
-    tmp = f"{ttable}__new"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    (
-        spark.createDataFrame(leftover, schema)
-        .write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    )
-    spark.sql(f"DROP TABLE {ttable}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {ttable}")
+    compact_table(spark, ttable, lambda t: t.filter(racing))
     raise RuntimeError(
-        f"compaction on {table}: {len(leftover)} tombstone row(s) at "
+        f"compaction on {table}: {n_left} tombstone row(s) at "
         f"seq >= {cutoff} appeared DURING the rewrite — a concurrent "
         f"mutator violated the compaction quiet window (module "
         f"docstring).  Their tombstones were preserved (deletes remain "
@@ -871,10 +825,31 @@ def _retire_tombstones(spark, table: str, cutoff: int) -> None:
     )
 
 
+def _compact_index(spark, table: str, prefix: str, keys: dict
+                   ) -> tuple[int, int]:
+    """The compaction body shared by both index kinds: heal an
+    interrupted swap of the table and of its tombstones before either
+    is read, fold the main table (and the IVF ``__vectors`` twin)
+    through the store's compaction swap with the ``prefix`` stamp
+    carried, then retire the folded tombstones."""
+    restore_swap(spark, table)
+    restore_swap(spark, _tombstones_table(table))
+    p = _read_stamp(spark, table, prefix, keys)
+    id_col = p["id_col"]
+    fold = _churn_fold(_tombstone_maxseq(spark, table, id_col), id_col)
+    out = compact_table(spark, table, fold, prefix=prefix)
+    vtable = _vectors_table(table)
+    if restore_swap(spark, vtable):
+        compact_table(spark, vtable, fold)
+    _retire_tombstones(spark, table, p["next_seq"])
+    return out
+
+
 def compact_ivf_index(spark, table: str) -> tuple[int, int]:
     """Fold append-accreted posting files back to one per bucket via
-    the shared bucketed-table swap — self-healing renames, ``ivf.``
-    parameter stamp carried across — apply the accumulated tombstones
+    the store's compaction swap (:func:`gdp_etl_spark.io.compact_table`
+    — self-healing renames, a live row-count tripwire, ``ivf.``
+    parameter stamp carried across) — apply the accumulated tombstones
     PHYSICALLY (dead rows dropped from the rewrite, redelivered
     duplicates collapsed to their max seq — see :func:`_churn_fold`),
     compact the ``__vectors`` twin under the same fold, and clear the
@@ -885,22 +860,7 @@ def compact_ivf_index(spark, table: str) -> tuple[int, int]:
     time or in the next compaction is a no-op.  Run in a mutation
     quiet window (single-writer contract, module docstring).  Returns
     ``(files_before, files_after)`` for the ops ledger."""
-    p = _read_stamp(spark, table)
-    id_col = p["id_col"]
-    cutoff = p["next_seq"]
-    tomb = _tombstone_maxseq(spark, table, id_col)
-    out = _compact_bucketed_table(
-        spark, table, ["cell"], prop_prefix=_P,
-        transform=_churn_fold(tomb, id_col, ["cell", id_col, "q"]),
-    )
-    vtable = _vectors_table(table)
-    if spark.catalog.tableExists(vtable):
-        _compact_bucketed_table(
-            spark, vtable, [id_col], prop_prefix=_P,
-            transform=_churn_fold(tomb, id_col, [id_col, "q"]),
-        )
-    _retire_tombstones(spark, table, cutoff)
-    return out
+    return _compact_index(spark, table, _P, _KEYS)
 
 
 # ---------------------------------------------------------------------------
@@ -994,36 +954,29 @@ def write_pq_index(
         "seed": seed, "id_col": id_col, "vec_col": vec_col, "dim": dim,
         "next_seq": 1,
     }
-    ctmp, ptmp = f"{ctable}__new", f"{table}__new"
-    spark.sql(f"DROP TABLE IF EXISTS {ctmp}")
-    spark.sql(f"DROP TABLE IF EXISTS {ptmp}")
-    local_df(
+    create_table(local_df(
         spark,
         [(s, i, c) for s, book in enumerate(books)
          for i, c in enumerate(book)],
         "subspace int, code int, c array<bigint>",
-    ).write.mode("overwrite").saveAsTable(ctmp)
-    spark.sql(f"ALTER TABLE {ctmp} RENAME TO {ctable}")
-    _save_bucketed(
+    ), ctable)
+    create_table(
         _pq_codes(df, id_col, vec_col, books, sub, scale, offset, seq=0),
-        ptmp, id_col, num_buckets, "overwrite",
+        table, [id_col], num_buckets, [id_col],
+        stamp={_PQ + k: v for k, v in params.items()},
     )
-    _stamp(spark, ptmp, _PQ, params)
-    spark.sql(f"ALTER TABLE {ptmp} RENAME TO {table}")
 
 
 def _append_pq(df: DataFrame, table: str, p: dict,
                books: list[list[list[int]]]) -> None:
     """The PQ append body, at the stamped ``next_seq``: encode with the
     stored codebooks, append the codes, bump the seq."""
-    spark = df.sparkSession
-    _save_bucketed(
+    append_table(
         _pq_codes(df, p["id_col"], p["vec_col"], books, p["dim"] // p["m"],
                   p["scale"], p["offset"], seq=p["next_seq"]),
-        table, p["id_col"], _num_buckets(spark, table), "append",
+        table,
     )
-    _bump_next_seq(spark, table, _PQ, p["next_seq"])
-    spark.catalog.refreshTable(table)
+    _bump_next_seq(df.sparkSession, table, _PQ, p["next_seq"])
 
 
 def append_to_pq_index(df: DataFrame, table: str) -> None:
@@ -1100,18 +1053,9 @@ def pq_probe_index(
 
 def compact_pq_index(spark, table: str) -> tuple[int, int]:
     """Fold append-accreted code files back to one per bucket via the
-    shared bucketed-table swap (``pq.`` stamp carried) — the
+    store's compaction swap (``pq.`` stamp carried) — the
     :func:`compact_ivf_index` churn fold on the codes table: dead rows
     dropped, redelivered duplicates collapsed on ``(id, codes)`` to
     their max seq, folded tombstones cleared with concurrent ones
     preserved (loud).  Run in a mutation quiet window."""
-    p = _read_stamp(spark, table, _PQ, _PQ_KEYS)
-    id_col = p["id_col"]
-    cutoff = p["next_seq"]
-    tomb = _tombstone_maxseq(spark, table, id_col)
-    out = _compact_bucketed_table(
-        spark, table, [id_col], prop_prefix=_PQ,
-        transform=_churn_fold(tomb, id_col, [id_col, "codes"]),
-    )
-    _retire_tombstones(spark, table, cutoff)
-    return out
+    return _compact_index(spark, table, _PQ, _PQ_KEYS)

@@ -127,6 +127,14 @@ def semantic_decontaminate(
     cosine re-rank (``cosine_exact``) makes every surviving pair — and
     therefore the flag set — engine-exact, so a SQL oracle replays
     buckets AND similarities bit-for-bit.
+
+    ``dim``: without it, one limit-1 peek per side resolves the
+    dimension and raises when the sides disagree.  With an explicit
+    ``dim`` the peeks are skipped and the dimension is checked per
+    non-NULL vector, executor-side, at the first action.  NULL vectors
+    are skipped, so a side that is empty or whose vectors are all NULL
+    is never checked: a wrong ``dim`` there passes silently (that side
+    contributes no candidates either way).
     """
     from ..functions.vectors import cosine_exact_arrow
     from .similarity import rademacher_lsh_buckets

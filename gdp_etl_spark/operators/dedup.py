@@ -16,6 +16,11 @@ exactness/recall/cost curve at 100-TB scale:
                   candidates by pigeonhole over 16-bit chunks.
 * n-gram Jaccard / embedding-cosine — exact verifies used standalone or
   as the LSH verify stage.
+
+The persisted exact-dedup and MinHash indexes (write / append / probe /
+compact) keep only their columns, bucket keys and ``minhash.`` stamp
+here; every create, append, stamp and compaction swap goes through the
+persisted-table store in :mod:`gdp_etl_spark.io`.
 """
 
 from __future__ import annotations
@@ -28,6 +33,13 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import shingles
 from ..functions.vectors import cosine_exact_arrow
+from ..io import (
+    append_table,
+    compact_table,
+    create_table,
+    read_stamp,
+    write_bucketed_table,
+)
 
 # Mersenne prime modulus → deterministic seeded-xxhash64 MinHash perms.
 _MERSENNE = (1 << 61) - 1
@@ -1019,11 +1031,9 @@ def write_dedup_index(
     so storing it would be dead weight.
 
     Buckets are metastore metadata, not directory layout, so the index
-    is addressed as a saveAsTable name (same contract as
-    :func:`gdp_etl_spark.io.write_bucketed_table`).
+    is addressed as a saveAsTable name; it replaces any live index
+    under the name (:func:`gdp_etl_spark.io.write_bucketed_table`).
     """
-    from ..io import write_bucketed_table
-
     index = (
         corpus.select(F.md5(F.col(text_col)).alias("text_md5"))
         .filter(F.col("text_md5").isNotNull())
@@ -1070,37 +1080,20 @@ def dedup_against_index(
     )
 
 
-def _num_buckets(spark, table: str) -> int:
-    """Bucket count of a live table, read from the catalog so callers
-    (appends, compactions) can never desynchronize from the table's
-    actual spec.  Raises with a clear message for a non-bucketed
-    table — appending unbucketed data would silently break every
-    shuffle-free probe plan."""
-    meta = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect()
+#: TBLPROPERTIES prefix of the MinHash band table's parameter stamp
+_MH = "minhash."
+
+
+def _minhash_stamp(num_perm: int, bands: int, shingle_k: int) -> dict:
+    """The banding parameters as stamp properties: a probe or append
+    with different parameters generates a different candidate space —
+    recall silently collapses with no error anywhere.  The stamp makes
+    the mismatch loud."""
+    return {
+        f"{_MH}num_perm": str(int(num_perm)),
+        f"{_MH}bands": str(int(bands)),
+        f"{_MH}shingle_k": str(int(shingle_k)),
     }
-    if "Num Buckets" not in meta:
-        raise ValueError(
-            f"{table} is not a bucketed table — the index write/append "
-            "cycle requires the bucketed spec (write_*_index creates it)"
-        )
-    return int(meta["Num Buckets"])
-
-
-def _stamp_minhash_params(
-    spark, index_table: str, num_perm: int, bands: int, shingle_k: int
-) -> None:
-    """Persist the banding parameters AS TABLE PROPERTIES on the band
-    table: a probe or append with different parameters generates a
-    different candidate space — recall silently collapses with no
-    error anywhere.  The properties make the mismatch loud."""
-    spark.sql(
-        f"ALTER TABLE {index_table} SET TBLPROPERTIES ("
-        f"'minhash.num_perm' = '{int(num_perm)}', "
-        f"'minhash.bands' = '{int(bands)}', "
-        f"'minhash.shingle_k' = '{int(shingle_k)}')"
-    )
 
 
 def _check_minhash_params(
@@ -1109,13 +1102,8 @@ def _check_minhash_params(
     """Raise on a parameter mismatch with the stamped index; tables
     written before the stamp existed (no properties) pass unchecked —
     absence is legacy, disagreement is a bug."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {index_table}").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    want = {
-        "minhash.num_perm": str(int(num_perm)),
-        "minhash.bands": str(int(bands)),
-        "minhash.shingle_k": str(int(shingle_k)),
-    }
+    props = read_stamp(spark, index_table, _MH)
+    want = _minhash_stamp(num_perm, bands, shingle_k)
     bad = {
         k: (props[k], v) for k, v in want.items()
         if k in props and props[k] != v
@@ -1137,8 +1125,9 @@ def append_to_dedup_index(
 ) -> None:
     """Fold a batch's admitted documents into the persisted index —
     the write half of the nightly cycle.  Appends the batch's distinct
-    hashes with the table's bucket spec preserved (Spark validates the
-    bucketing on append), so the index stays shuffle-free to probe.
+    hashes with the table's bucket spec preserved (the store's
+    :func:`gdp_etl_spark.io.append_table`), so the index stays
+    shuffle-free to probe.
 
     Hashes already present in the index are NOT re-deduplicated
     across files — an anti-join only tests existence, so duplicate
@@ -1148,24 +1137,12 @@ def append_to_dedup_index(
     :func:`dedup_against_index`, which is already corpus-disjoint and
     batch-distinct, so no duplicates arise at all.
     """
-    spark = admitted.sparkSession
-    n_buckets = _num_buckets(spark, index_table)
-    (
+    append_table(
         admitted.select(F.md5(F.col(text_col)).alias("text_md5"))
         .filter(F.col("text_md5").isNotNull())
-        .distinct()
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, "text_md5")
-        .sortBy("text_md5")
-        .saveAsTable(index_table)
+        .distinct(),
+        index_table,
     )
-    # Invalidate the catalog's cached file listing for the table: under
-    # a streaming foreachBatch the append runs in the stream's CLONED
-    # session and the outer session's relation cache keeps serving the
-    # pre-append file set — subsequent dedup_against_index reads would
-    # silently re-admit just-appended texts (observed live).
-    spark.catalog.refreshTable(index_table)
 
 
 def compact_dedup_index(spark, index_table: str) -> tuple[int, int]:
@@ -1181,99 +1158,17 @@ def compact_dedup_index(spark, index_table: str) -> tuple[int, int]:
     is bucket-in-place, so the ``distinct`` plans WITHOUT a data
     exchange (grouping key == bucket key) and the only shuffle is the
     writer's own redistribution into the new table's buckets.  The swap
-    is metastore RENAMEs (old → ``__old``, fresh → live, drop
-    ``__old``) — each rename is atomic; a probe can land between them,
-    so run compaction in the nightly cycle's quiet window, not
-    concurrently with ingest.  A failed rewrite never loses the live
-    table: the fresh copy builds under ``__compacting`` first, a
-    failed swap-in rename restores the original, and a hard crash
-    between the renames is healed by the NEXT run (live-name-missing +
-    ``__old``-present is detected on entry and the original restored).
+    is the store's rename swap (:func:`gdp_etl_spark.io.compact_table`):
+    the fresh copy builds under ``__compacting``, a live row count that
+    changed meanwhile (a racing append) raises instead of losing rows,
+    a failed swap-in rename restores the original, and a hard crash
+    between the renames is healed by the NEXT run.  A probe can land
+    between the renames, so run compaction in the nightly cycle's
+    quiet window, not concurrently with ingest.
 
     Returns ``(files_before, files_after)`` for the ops ledger.
     """
-    return _compact_bucketed_table(spark, index_table, ["text_md5"])
-
-
-def _compact_bucketed_table(
-    spark, table: str, bucket_cols: list[str],
-    prop_prefix: str = "minhash.",
-    transform=None,
-) -> tuple[int, int]:
-    """Shared compaction cycle for an append-accreted bucketed table:
-    distinct full rows → optional ``transform`` (a DataFrame →
-    DataFrame fold the caller needs baked into the rewrite, e.g. the
-    ANN index's tombstone resolution) → rewrite under ``__compacting``
-    with the LIVE table's bucket count (read from the catalog, so
-    callers can't desynchronize it) → metastore-rename swap, original
-    restored if the swap-in rename FAILS.  A hard crash (kill/OOM) between the two
-    renames is also recoverable: the next compaction run detects the
-    live-name-missing/``__old``-present state on entry and restores
-    the original before proceeding, so the cycle self-heals instead of
-    stranding every probe on TABLE_NOT_FOUND.  Sort columns = bucket
-    columns, matching every index table this package writes."""
-    tmp, old = f"{table}__compacting", f"{table}__old"
-    # self-heal a crash inside a PREVIOUS compaction's rename window:
-    # if the live name is gone but __old survives, the crash landed
-    # between the two renames — restore the original before anything
-    # else (a probe crashing on TABLE_NOT_FOUND until a human renames
-    # it back is the failure mode the docstring promises away).
-    if not spark.catalog.tableExists(table):
-        if spark.catalog.tableExists(old):
-            spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
-        else:
-            raise ValueError(
-                f"{table} does not exist (and no {old} to restore)"
-            )
-    spark.catalog.refreshTable(table)
-    n_buckets = _num_buckets(spark, table)
-    # carry the minhash.* parameter stamp across the swap — the rewrite
-    # is a NEW metastore entry and would silently drop it, disarming the
-    # probe-time mismatch guard.  Allowlist, not blocklist: carrying
-    # engine-managed properties (Hive stats like numFiles/totalSize)
-    # would restamp the OLD file layout onto the compacted table
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        if r["key"].startswith(prop_prefix)
-    }
-    files_before = len(spark.table(table).inputFiles())
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    fresh = spark.table(table).distinct()
-    if transform is not None:
-        fresh = transform(fresh)
-    (
-        fresh
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(tmp)
-    )
-    if props:
-        # Stamp the TMP table BEFORE the rename swap (verdict-advice r9):
-        # a post-swap SET TBLPROPERTIES that failed would leave the live
-        # table stampless, and _check_minhash_params treats absence as
-        # legacy — the mismatch guard would be permanently disarmed.
-        # Stamping tmp first means the rename carries the properties
-        # atomically; a failure HERE aborts before any rename, with the
-        # original table untouched.  Quote-escape embedded quotes so a
-        # hostile value is a stored string, not a syntax error.
-        kv = ", ".join(
-            "'{}' = '{}'".format(k.replace("'", "''"), v.replace("'", "''"))
-            for k, v in sorted(props.items())
-        )
-        spark.sql(f"ALTER TABLE {tmp} SET TBLPROPERTIES ({kv})")
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    try:
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    except Exception:
-        spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
-        raise
-    spark.sql(f"DROP TABLE {old}")
-    spark.catalog.refreshTable(table)
-    return files_before, len(spark.table(table).inputFiles())
+    return compact_table(spark, index_table, DataFrame.distinct)
 
 
 def compact_minhash_index(
@@ -1293,12 +1188,8 @@ def compact_minhash_index(
     ``{table: (files_before, files_after), table_sets: (...)}``.
     """
     return {
-        index_table: _compact_bucketed_table(
-            spark, index_table, ["band", "bucket"]
-        ),
-        f"{index_table}_sets": _compact_bucketed_table(
-            spark, f"{index_table}_sets", ["doc_id"]
-        ),
+        t: compact_table(spark, t, DataFrame.distinct, prefix=_MH)
+        for t in (index_table, f"{index_table}_sets")
     }
 
 
@@ -1551,10 +1442,18 @@ def write_minhash_index(
     Same banding math as :func:`minhash_lsh_pairs` (xxhash64-seeded
     permutations, ``num_perm/bands`` rows per band), so the two paths
     generate identical candidates for identical parameters.
+
+    Any live index under the name is dropped first; both tables then
+    go through the store's create (:func:`gdp_etl_spark.io.create_table`),
+    the band table last and stamped with the banding parameters before
+    its rename — a crash never leaves a live band table without its
+    stamp (which the probe would read as legacy and leave unchecked).
     """
     from ..functions.text import shingles as _shingles
-    from ..io import write_bucketed_table
 
+    spark = corpus.sparkSession
+    for t in (index_table, f"{index_table}_sets"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
     sh = corpus.select(
         F.col(id_col).alias("doc_id"),
         _shingles(F.col(text_col), shingle_k).alias("__sh"),
@@ -1564,21 +1463,17 @@ def write_minhash_index(
             "doc_id",
             F.transform("__sh", lambda s: F.xxhash64(s)).alias("sh_hashes"),
         )
-        write_bucketed_table(
-            sets, f"{index_table}_sets", ["doc_id"],
-            num_buckets=n_buckets, sort_by=["doc_id"],
+        create_table(
+            sets, f"{index_table}_sets", ["doc_id"], n_buckets, ["doc_id"]
         )
         sig = sh.select(
             "doc_id",
             _signature_from_shingles(F.col("__sh"), num_perm).alias("__sig"),
         )
-        write_bucketed_table(
+        create_table(
             _banded("doc_id", sig, num_perm, bands), index_table,
-            ["band", "bucket"], num_buckets=n_buckets,
-            sort_by=["band", "bucket"],
-        )
-        _stamp_minhash_params(
-            corpus.sparkSession, index_table, num_perm, bands, shingle_k
+            ["band", "bucket"], n_buckets, ["band", "bucket"],
+            stamp=_minhash_stamp(num_perm, bands, shingle_k),
         )
     finally:
         sh.unpersist()
@@ -1632,9 +1527,9 @@ def append_to_minhash_index(
     cycle (the sibling of :func:`append_to_dedup_index`).  Band
     memberships append to ``<index_table>`` and shingle-hash sets to
     ``<index_table>_sets``, each with its table's bucket spec read
-    from the catalog so callers can't desynchronize it; both appends
-    re-specify sortBy and end with a catalog refresh (cloned-session
-    streaming gotcha — see :func:`append_to_dedup_index`).
+    from the catalog so callers can't desynchronize it (the store's
+    :func:`gdp_etl_spark.io.append_table`, which also refreshes the
+    catalog's cached file listing).
 
     Parameters must match the ones the index was written with.
     Re-appending the same documents (crash redelivery) duplicates
@@ -1655,35 +1550,22 @@ def append_to_minhash_index(
         _shingles(F.col(text_col), shingle_k).alias("__sh"),
     ).filter(F.size("__sh") > 0).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        (
+        append_table(
             sh.select(
                 "doc_id",
                 F.transform("__sh", lambda s: F.xxhash64(s)).alias(
                     "sh_hashes"
                 ),
-            )
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(_num_buckets(spark, f"{index_table}_sets"), "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(f"{index_table}_sets")
+            ),
+            f"{index_table}_sets",
         )
         sig = sh.select(
             "doc_id",
             _signature_from_shingles(F.col("__sh"), num_perm).alias("__sig"),
         )
-        (
-            _banded("doc_id", sig, num_perm, bands)
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(_num_buckets(spark, index_table), "band", "bucket")
-            .sortBy("band", "bucket")
-            .saveAsTable(index_table)
-        )
+        append_table(_banded("doc_id", sig, num_perm, bands), index_table)
     finally:
         sh.unpersist()
-    spark.catalog.refreshTable(index_table)
-    spark.catalog.refreshTable(f"{index_table}_sets")
 
 
 def near_dup_against_index(

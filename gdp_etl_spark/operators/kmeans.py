@@ -252,6 +252,14 @@ def _check_query_ids(query_ids: Sequence, fn_name: str) -> list[int]:
     return query_ids
 
 
+def _check_nprobe(nprobe: int, fn_name: str) -> None:
+    """A probe visits at least one cell: a slice ``[:nprobe]`` with
+    ``nprobe <= 0`` silently probes nothing (0) or all but the last
+    cells (negative) instead of raising."""
+    if nprobe < 1:
+        raise ValueError(f"{fn_name}: nprobe must be >= 1, got {nprobe!r}")
+
+
 def _check_id_col(df: DataFrame, id_col: str, fn_name: str) -> None:
     """The id column is compared against bigint query-id literals."""
     id_type = df.schema[id_col].dataType.simpleString()

@@ -358,6 +358,9 @@ def ivf_topk(
     """
     import numpy as np
 
+    from .kmeans import _check_nprobe
+
+    _check_nprobe(nprobe, "ivf_topk")
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     n_total = base.count()
     if n_total == 0:
@@ -479,6 +482,7 @@ def ivf_topk_fixed(
     """
     from .kmeans import (
         _check_id_col,
+        _check_nprobe,
         _check_query_ids,
         _explode_scores,
         _ivf_scores,
@@ -492,6 +496,7 @@ def ivf_topk_fixed(
     )
 
     query_ids = _check_query_ids(query_ids, "ivf_topk_fixed")
+    _check_nprobe(nprobe, "ivf_topk_fixed")
     _check_id_col(df, id_col, "ivf_topk_fixed")
     base = df.filter(F.col(vec_col).isNotNull())
     train = base

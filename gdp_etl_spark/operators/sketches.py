@@ -15,6 +15,11 @@ their driver evidence is the error-bound contract (sketch_bounds) and
 unit tests against exact aggregates.  :func:`portable_hll_ndv` closes
 that gap for NDV: an HLL whose hash, registers and estimator are all
 engine-replayable, making the estimate itself oracle-checkable.
+
+The persisted NDV and histogram sketch tables keep only their
+``ndv.``/``hist.`` stamp keys and their merge folds here; create,
+stamp and compaction swap are the persisted-table store's in
+:mod:`gdp_etl_spark.io`.
 """
 
 from __future__ import annotations
@@ -23,6 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..io import compact_table, create_table, read_stamp, restore_swap
 
 
 def group_cardinality_sketch(
@@ -430,27 +437,11 @@ def source_minhash_overlap(
 #: TBLPROPERTIES keys stamping an NDV sketch table's parameters —
 #: a probe or append under different params is a silently different
 #: sketch space, so the stamp makes any mismatch loud (the
-#: minhash-index precedent, dedup._stamp_minhash_params)
-_NDV_P = "ndv.p"
-_NDV_VALUE = "ndv.value_col"
-_NDV_GROUPS = "ndv.group_cols"
-
-
-def _stamp_ndv_params(
-    spark, table: str, p: int, value_col: str, group_cols: list[str]
-) -> None:
-    """Stamp the sketch parameters as table properties.  Values are
-    quote-escaped (the _compact_bucketed_table rule: a hostile value
-    is a stored string, not a syntax error)."""
-    def q(v: str) -> str:
-        return v.replace("'", "''")
-
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'{_NDV_P}' = '{int(p)}', "
-        f"'{_NDV_VALUE}' = '{q(value_col)}', "
-        f"'{_NDV_GROUPS}' = '{q(','.join(group_cols))}')"
-    )
+#: minhash-index precedent)
+_NDV = "ndv."
+_NDV_P = _NDV + "p"
+_NDV_VALUE = _NDV + "value_col"
+_NDV_GROUPS = _NDV + "group_cols"
 
 
 def write_ndv_sketch(
@@ -470,31 +461,25 @@ def write_ndv_sketch(
     and reads derive them from the stamp, so the sketch space cannot
     silently fork.
 
-    Durability protocol (the compaction-swap rule): the registers are
-    written and stamped under a TMP name, then RENAMED into place — a
-    crash between write and stamp can never leave a live-but-stampless
-    (i.e. bricked) table, and a failed attempt never blocks a retry."""
+    Durability protocol (the store's
+    :func:`gdp_etl_spark.io.create_table`): the registers are written
+    and stamped under a TMP name, then RENAMED into place — a crash
+    between write and stamp can never leave a live-but-stampless (i.e.
+    bricked) table, and a failed attempt never blocks a retry."""
     group_cols = list(group_cols)
     bad = [c for c in group_cols if "," in c]
     if bad:
         raise ValueError(f"group column names may not contain ',': {bad}")
     _check_p(p)
-    spark = df.sparkSession
-    if spark.catalog.tableExists(table):
-        raise ValueError(f"table {table} already exists")
-    tmp = f"{table}__new"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    regs = portable_hll_registers(df, group_cols, value_col, p)
-    regs.write.mode("overwrite").saveAsTable(tmp)
-    _stamp_ndv_params(spark, tmp, p, value_col, group_cols)
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+    create_table(
+        portable_hll_registers(df, group_cols, value_col, p), table,
+        stamp={_NDV_P: int(p), _NDV_VALUE: value_col,
+               _NDV_GROUPS: ",".join(group_cols)},
+    )
 
 
 def _ndv_stamp(spark, table: str) -> tuple[int, str, list[str]]:
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
+    props = read_stamp(spark, table, _NDV)
     missing = [k for k in (_NDV_P, _NDV_VALUE, _NDV_GROUPS)
                if k not in props]
     if missing:
@@ -553,13 +538,14 @@ def compact_ndv_sketch(spark, table: str) -> None:
     """Fold accumulated appends back to one row per (group, register):
     max-merge rho, sum the value counts.
 
-    Durability protocol (the _compact_bucketed_table swap, verbatim in
-    spirit): the merged state is written AND stamped under a tmp name,
-    then swapped in via metastore renames with the original kept as
-    ``__old`` until the swap completes — at no crash point is the only
-    copy of the registers gone or stampless (an in-place overwrite
-    would risk both, and the base data the registers summarize may no
-    longer exist).
+    Durability protocol: the store's compaction swap
+    (:func:`gdp_etl_spark.io.compact_table`) — the merged state is
+    written AND stamped under a tmp name, then swapped in via metastore
+    renames with the original kept as ``__old`` until the swap
+    completes, and a crash between the renames is healed on the next
+    run — at no crash point is the only copy of the registers gone or
+    stampless (an in-place overwrite would risk both, and the base data
+    the registers summarize may no longer exist).
 
     Concurrency: compaction assumes a SINGLE WRITER (the usual batch
     maintenance-window contract; Spark's metastore renames give no
@@ -569,52 +555,16 @@ def compact_ndv_sketch(spark, table: str) -> None:
     dropped with ``__old`` (advisor finding).  The residual window
     between the re-check and the rename remains — that part is the
     single-writer assumption, now explicit."""
-    p, value_col, group_cols = _ndv_stamp(spark, table)
-    _swap_compacted(
-        spark,
-        table,
-        lambda t: (
-            t.groupBy(*group_cols, "reg").agg(
-                F.max("rho").alias("rho"),
-                F.sum("n_vals").alias("n_vals"),
-            )
+    restore_swap(spark, table)
+    _, _, group_cols = _ndv_stamp(spark, table)
+    compact_table(
+        spark, table,
+        lambda t: t.groupBy(*group_cols, "reg").agg(
+            F.max("rho").alias("rho"),
+            F.sum("n_vals").alias("n_vals"),
         ),
-        lambda tmp: _stamp_ndv_params(spark, tmp, p, value_col, group_cols),
+        prefix=_NDV,
     )
-
-
-def _swap_compacted(spark, table: str, merge_fn, stamp_fn) -> None:
-    """The shared compaction swap protocol (ONE copy — review
-    finding): refresh, count, write the ``merge_fn`` result of the
-    live table under a tmp name, ``stamp_fn`` it, re-check the live
-    row count (concurrent-append tripwire), then swap via metastore
-    renames keeping ``__old`` until the swap completes — at no crash
-    point is the only copy of the state gone or stampless."""
-    spark.catalog.refreshTable(table)
-    tmp, old = f"{table}__new", f"{table}__old"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    n_at_scan = spark.table(table).count()
-    merge_fn(spark.table(table)).write.mode("overwrite").saveAsTable(tmp)
-    stamp_fn(tmp)
-    spark.catalog.refreshTable(table)
-    n_now = spark.table(table).count()
-    if n_now != n_at_scan:
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        raise RuntimeError(
-            f"compaction: {table} changed during compaction "
-            f"({n_at_scan} -> {n_now} rows) — a concurrent append "
-            f"would have been lost; retry when the writer is quiesced"
-        )
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    try:
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    except Exception:
-        # restore the original under its name; the stamped tmp remains
-        # for inspection
-        spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
-        raise
-    spark.sql(f"DROP TABLE IF EXISTS {old}")
 
 
 # ---------------------------------------------------------------------------
@@ -630,9 +580,10 @@ def _swap_compacted(spark, table: str, merge_fn, stamp_fn) -> None:
 # hash-checkable.
 # ---------------------------------------------------------------------------
 
-_HIST_WIDTH = "hist.bin_width"
-_HIST_VALUE = "hist.value_col"
-_HIST_GROUPS = "hist.group_cols"
+_HIST = "hist."
+_HIST_WIDTH = _HIST + "bin_width"
+_HIST_VALUE = _HIST + "value_col"
+_HIST_GROUPS = _HIST + "group_cols"
 
 
 def hist_bins(
@@ -666,26 +617,8 @@ def hist_bins(
     )
 
 
-def _stamp_hist_params(
-    spark, table: str, bin_width: float, value_col: str,
-    group_cols: list[str],
-) -> None:
-    def q(v: str) -> str:
-        return v.replace("'", "''")
-
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'{_HIST_WIDTH}' = '{float(bin_width)!r}', "
-        f"'{_HIST_VALUE}' = '{q(value_col)}', "
-        f"'{_HIST_GROUPS}' = '{q(','.join(group_cols))}')"
-    )
-
-
 def _hist_stamp(spark, table: str) -> tuple[float, str, list[str]]:
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
+    props = read_stamp(spark, table, _HIST)
     missing = [k for k in (_HIST_WIDTH, _HIST_VALUE, _HIST_GROUPS)
                if k not in props]
     if missing:
@@ -709,21 +642,17 @@ def write_hist_sketch(
     bin_width: float,
 ) -> None:
     """Materialize fixed-width bin counts as a stamped metastore table
-    (the write_ndv_sketch durability protocol verbatim: tmp write +
+    (the store's create, as in :func:`write_ndv_sketch`: tmp write +
     stamp + rename — never live-but-stampless)."""
     group_cols = list(group_cols)
     bad = [c for c in group_cols if "," in c]
     if bad:
         raise ValueError(f"group column names may not contain ',': {bad}")
-    spark = df.sparkSession
-    if spark.catalog.tableExists(table):
-        raise ValueError(f"table {table} already exists")
-    tmp = f"{table}__new"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    bins = hist_bins(df, group_cols, value_col, bin_width)
-    bins.write.mode("overwrite").saveAsTable(tmp)
-    _stamp_hist_params(spark, tmp, bin_width, value_col, group_cols)
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+    create_table(
+        hist_bins(df, group_cols, value_col, bin_width), table,
+        stamp={_HIST_WIDTH: repr(float(bin_width)), _HIST_VALUE: value_col,
+               _HIST_GROUPS: ",".join(group_cols)},
+    )
 
 
 def append_to_hist_sketch(df: DataFrame, table: str) -> None:
@@ -807,16 +736,14 @@ def quantiles_from_hist(
 
 def compact_hist_sketch(spark, table: str) -> None:
     """Fold accumulated appends back to one row per (group, bin) —
-    the shared ``_swap_compacted`` protocol (tripwire + single-writer
-    assumption as in :func:`compact_ndv_sketch`)."""
-    bin_width, value_col, group_cols = _hist_stamp(spark, table)
-    _swap_compacted(
-        spark,
-        table,
+    the store's compaction swap (tripwire + single-writer assumption
+    as in :func:`compact_ndv_sketch`)."""
+    restore_swap(spark, table)
+    _, _, group_cols = _hist_stamp(spark, table)
+    compact_table(
+        spark, table,
         lambda t: t.groupBy(*group_cols, "bin").agg(
             F.sum("n_vals").alias("n_vals")
         ),
-        lambda tmp: _stamp_hist_params(
-            spark, tmp, bin_width, value_col, group_cols
-        ),
+        prefix=_HIST,
     )

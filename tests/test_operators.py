@@ -1412,3 +1412,23 @@ def test_ivf_fixed_rejects_non_integral_ids(spark):
         ivf_topk_fixed(emb, ["0"], num_centroids=2)
     with pytest.raises(ValueError, match="duplicates"):
         ivf_topk_fixed(emb, [1, 1], num_centroids=2)
+
+
+def test_ivf_nprobe_below_one_raises(spark):
+    """``nprobe`` slices the ranked cells: 0 would probe nothing and a
+    negative value all but the last cells.  Every IVF entry point
+    raises at call time instead, before any job or table read."""
+    from gdp_etl_spark.operators.ann_index import ivf_probe_index
+    from gdp_etl_spark.operators.similarity import ivf_topk, ivf_topk_fixed
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    for nprobe in (0, -1):
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_topk(emb, emb, num_centroids=2, nprobe=nprobe)
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_topk_fixed(emb, [0], num_centroids=2, nprobe=nprobe)
+        with pytest.raises(ValueError, match="nprobe"):
+            ivf_probe_index(spark, "t_no_such_index", [0], nprobe=nprobe)

@@ -1543,7 +1543,7 @@ def test_compaction_preserves_concurrent_tombstones(spark, monkeypatch):
     try:
         ai.write_ivf_index(emb, table, num_centroids=4, n_iter=1)
         ai.delete_from_ivf_index(spark, table, [3])        # seq 1
-        orig = ai._compact_bucketed_table
+        orig = ai.compact_table
         state = {"raced": False}
 
         def race(spark_, tbl, bucket_cols, **kw):
@@ -1553,10 +1553,10 @@ def test_compaction_preserves_concurrent_tombstones(spark, monkeypatch):
                 ai.delete_from_ivf_index(spark_, table, [7])  # seq 2
             return orig(spark_, tbl, bucket_cols, **kw)
 
-        monkeypatch.setattr(ai, "_compact_bucketed_table", race)
+        monkeypatch.setattr(ai, "compact_table", race)
         with _pytest.raises(RuntimeError, match="quiet window"):
             ai.compact_ivf_index(spark, table)
-        monkeypatch.setattr(ai, "_compact_bucketed_table", orig)
+        monkeypatch.setattr(ai, "compact_table", orig)
         # the racing tombstone survived the clear
         tomb = {r["vec_id"] for r in
                 spark.table(f"{table}__tombstones").collect()}
