@@ -20,6 +20,8 @@ Layout:
     plans      — the reference ETL pipeline, release diff and QA suite
                  re-expressed as lazy stages
     streaming  — Structured Streaming equivalents for the events table
+    queries    — the driver's query families: each builder beside its
+                 DuckDB oracle, filling one registry
 """
 
 __version__ = "0.2.0"

@@ -33,7 +33,7 @@ token ``left||right`` is strictly longer than ``left``, so it can
 never equal ``left`` and cascade).  For runs of the SAME symbol this
 matches the reference implementation's ``i += 2`` scan exactly:
 ``a a a`` under pair ``(a,a)`` becomes ``aa a``.  The DuckDB oracle
-(`__spark_entry__._bpe_sql`) replays the identical fold as a recursive
+(`gdp_etl_spark.queries.text._bpe_sql`) replays the identical fold as a recursive
 CTE, making the trained merge table hash-exact across engines.
 
 No counterpart exists in the reference repo (it is a GDP statistics

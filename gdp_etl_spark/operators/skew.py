@@ -94,7 +94,7 @@ def grouped_topk(
     half the corpus.
 
     Two hand-rolled "skew-proof" alternatives were built and measured
-    against this (see ``tools/probe_grouped_topk.py``): a salted
+    against this (see ``tools/probe_grouped_topk.py`` (removed; see commit 480b464)): a salted
     ``collect_list``-array top-k (10× SLOWER at 20M rows — object
     aggregation materializes whole groups as JVM objects and cannot
     spill) and a salted two-level window (strictly more work than

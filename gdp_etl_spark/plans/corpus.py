@@ -14,7 +14,8 @@ Stage order is the production order:
    partitionings, and composable (a 10% sample ⊂ the 20% sample).
 
 Every stage is engine-portable, so the whole chain is oracle-checkable
-end to end (``__spark_entry__`` registers it as ``corpus_clean``).  The
+end to end (``gdp_etl_spark.queries.curation`` registers it as
+``corpus_clean``).  The
 iterative near-dup clustering stage (``operators.cluster``) deliberately
 sits outside this chain — it is rows-only-checkable and its output is a
 pair table, not a document filter; compose via an anti-join against its

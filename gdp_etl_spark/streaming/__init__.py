@@ -2,8 +2,8 @@
 
 The reference is batch-only (SURVEY.md §2.10), so this module is the
 beyond-reference streaming surface: the same windowed aggregations the
-batch queries run (``__spark_entry__.q_events_tumbling`` /
-``q_events_sessions``), expressed as incremental streams with
+batch queries run (``gdp_etl_spark.queries.events.q_events_tumbling``
+/ ``q_events_sessions``), expressed as incremental streams with
 watermarked state so they run unbounded at cluster scale.
 
 Batch/stream parity is the design invariant — the tests replay the

@@ -1,55 +1,68 @@
 """Driver-contract structure: the correctness gate verifies the FIRST
-50 registered queries, so EXACTLY 50 keys must precede the
-end-of-window marker — the r6/r7 windows mis-registered 54 and the
-last four entries silently missed their re-check two rounds running.
-No Spark session needed: this parses the registration source."""
+50 names of ``queries()``, so the contract spells them once, as
+``DRIVER_WINDOW``, and orders everything else by name.  No Spark
+session needed: these read the query registry."""
 
-import re
+import subprocess
+import sys
 from pathlib import Path
 
+import pytest
+
 ENTRY = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
-MARKER = "-- end of driver window (50) --"
 
 
-def _registration_body() -> str:
-    s = ENTRY.read_text()
-    i = s.index("    return {", s.index("def queries()"))
-    return s[i:s.index("\n    }", i)]
+def test_driver_window_is_50_unique_registered_names():
+    import __spark_entry__ as e
+    from gdp_etl_spark.queries import REGISTRY
 
-
-def test_exactly_50_keys_precede_the_marker():
-    body = _registration_body()
-    assert MARKER in body, "window marker comment missing"
-    before = body.split(MARKER)[0]
-    keys = re.findall(r'^\s+"([a-z0-9_]+)":', before, re.M)
-    assert len(keys) == 50, (
-        f"driver window is the FIRST 50 keys; {len(keys)} precede the "
-        f"marker — the driver would check {'only ' if len(keys) > 50 else ''}"
-        f"a different set than the marker claims"
+    window = e.DRIVER_WINDOW
+    assert len(window) == 50 and len(set(window)) == 50, (
+        f"the driver checks the FIRST 50 queries; DRIVER_WINDOW holds "
+        f"{len(window)} names, {len(set(window))} distinct"
     )
+    assert not [n for n in window if n not in REGISTRY]
 
 
-def test_marker_window_matches_runtime_order():
+def test_queries_order_is_window_then_the_rest_sorted():
+    import __spark_entry__ as e
+    from gdp_etl_spark.queries import REGISTRY
+
+    rest = [n for n in REGISTRY if n not in e.DRIVER_WINDOW]
+    assert list(e.queries()) == [*e.DRIVER_WINDOW, *sorted(rest)]
+
+
+def test_every_registered_query_has_an_oracle():
     import __spark_entry__ as e
 
-    body = _registration_body()
-    before = body.split(MARKER)[0]
-    marked = re.findall(r'^\s+"([a-z0-9_]+)":', before, re.M)
-    assert list(e.queries())[:50] == marked
-
-
-def test_every_window_query_has_an_oracle_or_is_rows_only_by_design():
-    import __spark_entry__ as e
-
-    #: rows-only by design (non-SQL-expressible), each with an
-    #: oracle-checked companion — keep this list deliberate and short
-    rows_only_ok = {"sketch_stats"}
     oracles = e.oracle_sql()
-    missing = [
-        n for n in list(e.queries())[:50]
-        if n not in oracles and n not in rows_only_ok
-    ]
-    assert not missing, f"window entries without an oracle: {missing}"
+    assert list(oracles) == list(e.queries())
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+
+
+def test_duplicate_query_name_raises():
+    import __spark_entry__ as e
+    from gdp_etl_spark.queries import REGISTRY, query
+
+    builder = e.queries()["projection"]
+
+    def q_projection(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="projection"):
+        query(oracle="SELECT 1")(q_projection)
+    assert REGISTRY["projection"][0] is builder
+
+
+def test_check_correctness_rejects_an_unknown_query_name():
+    """A misspelled name must fail loudly, not run nothing and pass."""
+    out = subprocess.run(
+        [sys.executable, str(ENTRY.parent / "tools" / "check_correctness.py"),
+         "pq_idex"],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode != 0
+    assert "pq_idex" in out.stderr
 
 
 def _uncovered(registered, window, ledger_keys):

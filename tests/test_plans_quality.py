@@ -24,7 +24,7 @@ def _optimized(df) -> str:
 
 
 def test_flagship_pushes_band_filter_to_scan(spark):
-    df = e.q_flagship_revenue(spark, SF)
+    df = e.queries()["flagship_revenue"](spark, SF)
     plan = _plan(df)
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual" in plan
     # column pruning: the lineitem scan must not read all 11 columns
@@ -33,7 +33,7 @@ def test_flagship_pushes_band_filter_to_scan(spark):
 
 
 def test_flagship_broadcasts_dimensions(spark):
-    plan = _plan(e.q_flagship_revenue(spark, SF))
+    plan = _plan(e.queries()["flagship_revenue"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -45,11 +45,11 @@ def test_no_broadcast_hint_on_fact_scaling_tables(spark):
     inline literal dims) may carry hints — the fact joins must rely on
     AQE, which still picks broadcast at small SF and degrades to
     shuffle-hash at scale instead of failing."""
-    opt = _optimized(e.q_flagship_revenue(spark, SF))
+    opt = _optimized(e.queries()["flagship_revenue"](spark, SF))
     # exactly the two dim hints survive into the optimized plan
     assert opt.count("strategy=broadcast") == 2, opt
     # ...and the physical plan still broadcasts the dims without help
-    plan = _plan(e.q_flagship_revenue(spark, SF))
+    plan = _plan(e.queries()["flagship_revenue"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
     # the QA fact builders and TPC-H shapes carry no broadcast hint on
@@ -61,7 +61,7 @@ def test_no_broadcast_hint_on_fact_scaling_tables(spark):
 
 
 def test_topk_plans_take_ordered(spark):
-    plan = _plan(e.q_topk_orders(spark, SF))
+    plan = _plan(e.queries()["topk_orders"](spark, SF))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -73,12 +73,12 @@ def test_no_cartesian_in_bucketed_dedup(spark):
 
 
 def test_projection_prunes_scan_schema(spark):
-    plan = _plan(e.q_projection(spark, SF))
+    plan = _plan(e.queries()["projection"](spark, SF))
     assert "o_orderdate" not in plan  # unused column never scanned
 
 
 def test_rollup_closure_joins_are_broadcast(spark):
-    plan = _plan(e.q_rollup_hierarchy(spark, SF))
+    plan = _plan(e.queries()["rollup_hierarchy"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -235,7 +235,7 @@ def test_sketch_error_bounds(spark):
 def test_decontaminate_broadcasts_benchmark(spark):
     """The benchmark shingle set must broadcast — the corpus side of a
     decontamination pass can be 100 TB and must never shuffle."""
-    plan = _plan(e.q_decontaminate(spark, SF))
+    plan = _plan(e.queries()["decontaminate"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -243,7 +243,7 @@ def test_decontaminate_broadcasts_benchmark(spark):
 def test_pack_sequences_single_window_exchange(spark):
     """Packing is one hash exchange on the shard key (plus the window
     sort) — no global single-partition window."""
-    df = e.q_pack_sequences(spark, SF)
+    df = e.queries()["pack_sequences"](spark, SF)
     plan = _plan(df)
     assert "SinglePartition" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -253,14 +253,14 @@ def test_embed_transform_is_shuffle_free(spark):
     """Vector transforms are pure per-row map work: no key shuffle (the
     only Exchange is the loader's round-robin split-spread, which at
     real scale is the writer's file layout, not a reader step)."""
-    plan = _plan(e.q_embed_transform(spark, SF))
+    plan = _plan(e.queries()["embed_transform"](spark, SF))
     assert "Exchange hashpartitioning" not in plan
     assert "Exchange rangepartitioning" not in plan
     assert "SinglePartition" not in plan
 
 
 def test_repetition_stats_is_shuffle_free(spark):
-    plan = _plan(e.q_repetition_stats(spark, SF))
+    plan = _plan(e.queries()["repetition_stats"](spark, SF))
     assert "Exchange hashpartitioning" not in plan
     assert "Exchange rangepartitioning" not in plan
     assert "SinglePartition" not in plan
@@ -270,7 +270,7 @@ def test_outlier_fences_broadcasts_bands(spark):
     """Quartile bands (group-count rows) broadcast back to the tagging
     pass; the fact table itself shuffles once for the percentile agg
     and once for the count agg — never for the band join."""
-    plan = _plan(e.q_outlier_fences(spark, SF))
+    plan = _plan(e.queries()["outlier_fences"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -278,13 +278,13 @@ def test_outlier_fences_broadcasts_bands(spark):
 def test_weighted_sample_plans_take_ordered(spark):
     """The weighted draw must plan per-partition heaps + driver merge,
     never a global sort-shuffle."""
-    plan = _plan(e.q_weighted_sample(spark, SF))
+    plan = _plan(e.queries()["weighted_sample"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
 
 
 def test_dq_checks_fk_is_broadcast_anti_join(spark):
-    plan = _plan(e.q_dq_checks(spark, SF))
+    plan = _plan(e.queries()["dq_checks"](spark, SF))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # dim side must never shuffle
@@ -293,7 +293,7 @@ def test_dq_checks_fk_is_broadcast_anti_join(spark):
 def test_drift_psi_broadcasts_bounds_no_real_cartesian(spark):
     """The scalar bounds/totals rows ride broadcast nested loops; the
     data-sized sides must never meet in a cartesian or sort-merge."""
-    plan = _plan(e.q_drift_psi(spark, SF))
+    plan = _plan(e.queries()["drift_psi"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
 
@@ -301,7 +301,7 @@ def test_drift_psi_broadcasts_bounds_no_real_cartesian(spark):
 def test_resample_locf_single_window_exchange(spark):
     """The union-window formulation: exactly one window operator and no
     join in the optimized plan."""
-    opt = _optimized(e.q_resample_locf(spark, SF))
+    opt = _optimized(e.queries()["resample_locf"](spark, SF))
     assert opt.count("Window ") == 1
     assert "Join" not in opt
 
@@ -309,7 +309,7 @@ def test_resample_locf_single_window_exchange(spark):
 def test_min_cost_supplier_pushes_size_filter_no_cartesian(spark):
     """Q2 shape: the p_size predicate reaches the part scan; the
     decorrelated min-join stays equi (no cartesian); nation broadcasts."""
-    plan = _plan(e.q_min_cost_supplier(spark, SF))
+    plan = _plan(e.queries()["min_cost_supplier"](spark, SF))
     assert "LessThanOrEqual(p_size,10)" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
@@ -319,7 +319,7 @@ def test_top_acctbal_anti_join_and_pushed_date(spark):
     """Q22 shape: NOT EXISTS compiles to an anti join, the order-date
     filter is pushed to the orders scan, and the scalar threshold is a
     broadcast nested loop of ONE row — the only non-equi join allowed."""
-    plan = _plan(e.q_top_acctbal_no_orders(spark, SF))
+    plan = _plan(e.queries()["top_acctbal_no_orders"](spark, SF))
     assert "LeftAnti" in plan
     assert "GreaterThanOrEqual(o_orderdate" in plan
     assert "CartesianProduct" not in plan
@@ -360,7 +360,7 @@ def test_runtime_bloom_filter_reaches_fact_scan(spark):
 def test_orc_roundtrip_prunes_partition_directory(spark):
     """The segment filter must become a partition filter on the ORC
     scan (one directory read), not a post-scan predicate."""
-    plan = _plan(e.q_orc_roundtrip(spark, SF))
+    plan = _plan(e.queries()["orc_roundtrip"](spark, SF))
     assert "PartitionFilters: [isnotnull(c_mktsegment" in plan
     assert "= BUILDING" in plan
 
@@ -378,7 +378,7 @@ def test_pagerank_reuses_src_partitioning(spark):
 
 
 def test_shipping_priority_pushes_both_date_filters(spark):
-    plan = _plan(e.q_shipping_priority(spark, SF))
+    plan = _plan(e.queries()["shipping_priority"](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThan(l_shipdate" in plan
     assert "LessThan(o_orderdate" in plan
     assert "BroadcastHashJoin" in plan
@@ -386,7 +386,7 @@ def test_shipping_priority_pushes_both_date_filters(spark):
 
 
 def test_trade_volume_broadcasts_all_four_dims(spark):
-    plan = _plan(e.q_trade_volume(spark, SF))
+    plan = _plan(e.queries()["trade_volume"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in plan
 
@@ -394,9 +394,9 @@ def test_trade_volume_broadcasts_all_four_dims(spark):
 def test_rolling_corr_single_window_partitioned_on_group(spark):
     """One groupBy exchange + one window exchange, both keyed on the
     group column — the RANGE-frame sums must not add extra shuffles."""
-    opt = _optimized(e.q_rolling_corr(spark, SF))
+    opt = _optimized(e.queries()["rolling_corr"](spark, SF))
     assert opt.count("Window ") == 1
-    plan = _plan(e.q_rolling_corr(spark, SF))
+    plan = _plan(e.queries()["rolling_corr"](spark, SF))
     assert plan.count("Exchange hashpartitioning") <= 2
 
 
@@ -423,7 +423,7 @@ def test_tpch_sweep_no_cartesian_anywhere(spark):
 
 
 def test_regional_volume_pushes_date_broadcasts_dims(spark):
-    plan = _plan(e.q_regional_volume(spark, SF))
+    plan = _plan(e.queries()["regional_volume"](spark, SF))
     assert "GreaterThanOrEqual(o_orderdate" in plan   # band on the scan
     assert "BroadcastHashJoin" in plan                # region→nation dim
     assert "r_name" not in plan.split("FileScan parquet")[0]  # pruned out
@@ -433,23 +433,23 @@ def test_big_order_customers_aggregates_below_join(spark):
     """Q18's heavy sum(qty) HAVING filter must run BEFORE the joins —
     the survivor set (not the raw fact) is the join input — and the
     final top-100 must compile to TakeOrderedAndProject."""
-    opt = _optimized(e.q_big_order_customers(spark, SF))
+    opt = _optimized(e.queries()["big_order_customers"](spark, SF))
     agg_pos = opt.find("Aggregate")
     join_pos = opt.find("Join")
     assert agg_pos != -1 and join_pos != -1
     assert agg_pos > join_pos  # optimized plan prints top-down: joins above the agg
-    plan = _plan(e.q_big_order_customers(spark, SF))
+    plan = _plan(e.queries()["big_order_customers"](spark, SF))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_late_orders_is_semi_join(spark):
-    plan = _plan(e.q_late_orders(spark, SF))
+    plan = _plan(e.queries()["late_orders"](spark, SF))
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_waiting_supplier_semi_and_anti(spark):
-    plan = _plan(e.q_waiting_supplier(spark, SF))
+    plan = _plan(e.queries()["waiting_supplier"](spark, SF))
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
 
@@ -458,7 +458,7 @@ def test_cms_sketch_single_scan_broadcast_probe(spark):
     """The CMS build must be ONE scan of orders (explode + map-side
     combined agg — no self-join), and the probe side must broadcast
     the 4096-cell sketch, never shuffle the probes against it."""
-    plan = _plan(e.q_cms_heavy_hitters(spark, SF))
+    plan = _plan(e.queries()["cms_heavy_hitters"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -466,7 +466,7 @@ def test_cms_sketch_single_scan_broadcast_probe(spark):
 def test_triangle_count_all_equi_joins(spark):
     """Degree-oriented triangle counting is three equi-joins; any
     cartesian/BNLJ here means the orientation failed to key a join."""
-    plan = _plan(e.q_triangle_count(spark, SF))
+    plan = _plan(e.queries()["triangle_count"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -474,7 +474,7 @@ def test_triangle_count_all_equi_joins(spark):
 def test_forecast_revenue_full_pushdown_no_join(spark):
     """Q6 is the pushdown benchmark: every band predicate must reach
     the parquet scan and the plan must contain no join at all."""
-    plan = _plan(e.q_forecast_revenue(spark, SF))
+    plan = _plan(e.queries()["forecast_revenue"](spark, SF))
     assert "Join" not in plan
     # column pruning: 4 of 11 lineitem columns read
     assert ("ReadSchema: struct<l_quantity:double,l_extendedprice:double,"
@@ -482,7 +482,7 @@ def test_forecast_revenue_full_pushdown_no_join(spark):
     # band predicates all present below the aggregate (the FileScan
     # PushedFilters string is elided by toString truncation, so assert
     # on the optimized plan's single Filter instead)
-    opt = _optimized(e.q_forecast_revenue(spark, SF))
+    opt = _optimized(e.queries()["forecast_revenue"](spark, SF))
     for frag in ("l_shipdate", "l_discount", "l_quantity"):
         assert frag in opt
 
@@ -490,7 +490,7 @@ def test_forecast_revenue_full_pushdown_no_join(spark):
 def test_record_linkage_blocked_equi_join(spark):
     """Candidate generation must ride the blocking equi-keys — a
     cartesian over customers is the classic linkage blow-up."""
-    plan = _plan(e.q_record_linkage(spark, SF))
+    plan = _plan(e.queries()["record_linkage"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

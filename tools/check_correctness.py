@@ -13,7 +13,8 @@ compares:
 Usage: python tools/check_correctness.py [--sf-dir DIR] [query ...]
 
 ``--sf-dir`` names the testdata directory (default: the sf0.01 fixtures);
-with no query names, every registered query runs.
+with no query names, every registered query runs.  An unregistered name
+exits 2 before any query runs.
 """
 
 from __future__ import annotations
@@ -170,9 +171,13 @@ def main():
     sf_dir = SF_DIR
     if argv[:1] == ["--sf-dir"]:
         sf_dir, argv = argv[1], argv[2:]
+    qs, oracles = e.queries(), e.oracle_sql()
+    unknown = [n for n in argv if n not in qs]
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
     only = set(argv)
     print(f"fixtures: {sf_dir}")
-    qs, oracles = e.queries(), e.oracle_sql()
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -183,7 +188,7 @@ def main():
     from gdp_etl_spark.plans.golden import reference_available
 
     spark = get_spark("check", master="local[8]", shuffle_partitions=8)
-    n_pass = n_fail = n_rows_only = n_vacuous = n_hazard = 0
+    n_pass = n_fail = n_vacuous = n_hazard = 0
     n_env_skip = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -202,11 +207,6 @@ def main():
         except Exception as ex:
             print(f"FAIL  {name}: SPARK ERROR {type(ex).__name__}: {ex}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(spark_rows)} rows (rows-only, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            n_rows_only += 1
             continue
         try:
             # DESCRIBE gives real logical types (DB-API description is
@@ -248,8 +248,8 @@ def main():
             n_vacuous += not spark_rows
     env = f", {n_env_skip} env-skip" if n_env_skip else ""
     print(
-        f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only, "
-        f"{n_vacuous} vacuous, {n_hazard} driver-hazard{env} =="
+        f"\n== {n_pass} pass, {n_fail} fail, {n_vacuous} vacuous, "
+        f"{n_hazard} driver-hazard{env} =="
     )
     spark.stop()
     return 1 if n_fail else 0

@@ -17,7 +17,9 @@ rotation computed instead of hand-picked:
      round, then (c) everything else by last-green round ascending
      (stalest first), name as tie-break for determinism.
   3. Emit the top ``--slots`` (default 50) as the next window, plus a
-     staleness histogram so the burn-down is visible round-over-round.
+     staleness histogram so the burn-down is visible round-over-round,
+     and print the window as a ``DRIVER_WINDOW`` tuple to paste into
+     ``__spark_entry__.py``.
 
 Usage:
     python tools/window_staleness.py                 # histogram + window
@@ -30,6 +32,7 @@ import argparse
 import json
 import re
 import sys
+import textwrap
 from collections import Counter
 from pathlib import Path
 
@@ -37,13 +40,22 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 def registered_queries() -> list[str]:
-    """Registration order from __spark_entry__.py without a Spark import:
-    parse the literal dict the same way tests/test_driver_window.py does."""
-    src = (REPO / "__spark_entry__.py").read_text()
-    m = re.search(r"def queries\(\).*?return \{(.*?)\n    \}\n", src, re.S)
-    if not m:
-        raise SystemExit("could not locate queries() literal in __spark_entry__.py")
-    return re.findall(r'^\s*"([^"]+)": q_', m.group(1), re.M)
+    """Registered query names in the contract's order (no Spark session
+    starts: importing the contract only fills the query registry)."""
+    sys.path.insert(0, str(REPO))
+    import __spark_entry__
+
+    return list(__spark_entry__.queries())
+
+
+def window_tuple(window: list[str]) -> str:
+    """The window as a ``DRIVER_WINDOW`` tuple to paste into
+    ``__spark_entry__.py``."""
+    body = textwrap.fill(
+        " ".join(f'"{q}",' for q in window), width=76,
+        initial_indent="    ", subsequent_indent="    ",
+    )
+    return f"DRIVER_WINDOW = (\n{body}\n)"
 
 
 def ledger_rounds() -> list[tuple[int, dict]]:
@@ -133,6 +145,7 @@ def main() -> None:
             "NEVER" if last_any[q] == 0 else f"green r{last_green[q]}"
             + ("" if last_green[q] else f", rows r{last_any[q]}"))
         print(f"  {q}  [{tag}]")
+    print(f"\n{window_tuple(window)}")
 
 
 if __name__ == "__main__":
