@@ -65,6 +65,37 @@ def test_check_correctness_rejects_an_unknown_query_name():
     assert "pq_idex" in out.stderr
 
 
+@pytest.mark.parametrize("args, code, stream, needle", [
+    (["--help"], 0, "stdout", "--plans"),
+    (["pq_idex"], 2, "stderr", "pq_idex"),
+    (["--repeat"], 2, "stderr", "--repeat"),
+    (["--bogus"], 2, "stderr", "--bogus"),
+])
+def test_bench_checks_its_arguments_before_spark_starts(
+        args, code, stream, needle):
+    """``--help`` prints usage; a bad option, a missing value or an
+    unregistered name is a usage error naming the culprit — none of them
+    may start the benchmark."""
+    out = subprocess.run(
+        [sys.executable, str(ENTRY.parent / "bench.py"), *args],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == code, out.stderr[-2000:]
+    assert needle in getattr(out, stream)
+
+
+@pytest.mark.parametrize("samples, expected", [
+    ([5.0], 5.0),
+    ([9.0, 3.0], 3.0),
+    ([9.0, 2.0, 4.0], 3.0),
+])
+def test_warm_median_drops_the_cold_sample_once_a_warm_one_exists(
+        samples, expected):
+    import bench
+
+    assert bench.warm_median(samples) == expected
+
+
 def _uncovered(registered, window, ledger_keys):
     """Queries with neither a slot in the current window nor a driver
     row in ANY ledger — the class that shipped unverified in r12

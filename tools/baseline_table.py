@@ -17,7 +17,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from bench_diff import load  # noqa: E402
+from bench_refresh import load  # noqa: E402
 
 #: the recorded round-2 per-query baseline at sf0.1 (BASELINE.md
 #: "regression baseline for round 3+") — the operative BENCH gate is

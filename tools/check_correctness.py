@@ -10,15 +10,17 @@ compares:
 * order-insensitive values (columns sorted by name, rows sorted, doubles
   compared exactly first and with rel-tol 1e-9 as a diagnostic fallback).
 
-Usage: python tools/check_correctness.py [--sf-dir DIR] [query ...]
+Usage: python tools/check_correctness.py [--sf-dir DIR] [NAME ...]
 
 ``--sf-dir`` names the testdata directory (default: the sf0.01 fixtures);
-with no query names, every registered query runs.  An unregistered name
-exits 2 before any query runs.
+with no query names, every registered query runs.  Names resolve as in
+``bench.py``: an unregistered name exits 2 before any query runs, and the
+golden_* replays are skipped on hosts without the reference checkout.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
@@ -27,6 +29,8 @@ import time
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -163,45 +167,36 @@ def compare(name, spark_rows, spark_cols, oracle_rows, oracle_cols):
 
 
 def main():
-    import __spark_entry__ as e
     from gdp_etl_spark.schemas import TESTDATA_TABLES
     from gdp_etl_spark.session import get_spark
 
-    argv = sys.argv[1:]
-    sf_dir = SF_DIR
-    if argv[:1] == ["--sf-dir"]:
-        sf_dir, argv = argv[1], argv[2:]
-    qs, oracles = e.queries(), e.oracle_sql()
-    unknown = [n for n in argv if n not in qs]
-    if unknown:
-        print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
-        return 2
-    only = set(argv)
-    print(f"fixtures: {sf_dir}")
+    parser = argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
+    parser.add_argument("--sf-dir", default=SF_DIR, metavar="DIR",
+                        help=f"testdata directory (default: {SF_DIR})")
+    parser.add_argument("names", nargs="*", metavar="NAME",
+                        help="registered queries to check (default: all)")
+    args = parser.parse_args()
+    queries, skipped = bench.resolve(parser, args.names)
+    oracles = bench.entry_mod.oracle_sql()
+    print(f"fixtures: {args.sf_dir}")
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"
         )
-
-    from gdp_etl_spark.plans.golden import reference_available
 
     spark = get_spark("check", master="local[8]", shuffle_partitions=8)
     n_pass = n_fail = n_vacuous = n_hazard = 0
-    n_env_skip = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        if name.startswith("golden_") and not reference_available():
-            # env-gated like tests/test_golden_reference.py: the inputs
-            # are the reference checkout's real files
-            print(f"skip  {name}: reference checkout not available")
-            n_env_skip += 1
-            continue
+    for name in skipped:
+        print(f"skip  {name}: reference checkout not available")
+    for name, fn in queries.items():
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = fn(spark, args.sf_dir)
             spark_cols = sdf.columns
             spark_rows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:
@@ -246,7 +241,7 @@ def main():
             )
             n_pass += 1
             n_vacuous += not spark_rows
-    env = f", {n_env_skip} env-skip" if n_env_skip else ""
+    env = f", {len(skipped)} env-skip" if skipped else ""
     print(
         f"\n== {n_pass} pass, {n_fail} fail, {n_vacuous} vacuous, "
         f"{n_hazard} driver-hazard{env} =="
